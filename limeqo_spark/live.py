@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
 from limeqo_spark.complete import complete_log_space
-from limeqo_spark.plans import explain_formatted, featurize, parse_formatted_tree, plan_hash
-from limeqo_spark.steer import run_steered
+from limeqo_spark.plans import NODE_VOCABULARY, featurize, parse_formatted_tree, plan_hash
+from limeqo_spark.steer import hint_plan_texts, run_steered
 from limeqo_spark.strategies import ALPHA, BETA, rank_cells_by_improvement
 from limeqo_spark.tcnn import RidgeCostModel, hint_onehot
 
@@ -62,7 +62,8 @@ class LiveSteeringSession:
         self.cutoffs = np.zeros((q, h))
         self.explored = np.zeros((q, h))
         self.observations: list[LiveObservation] = []
-        self._plan_cache: dict[tuple[int, int], str] = {}
+        self._plan_hashes: dict[tuple[int, int], str] = {}
+        self._plan_texts: dict[tuple[int, int], str] = {}
         self._feature_cache: dict[tuple[int, int], np.ndarray] = {}
         self._tree_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
         self._tcnn = None
@@ -77,16 +78,15 @@ class LiveSteeringSession:
         return masked.min(axis=1)
 
     def _fingerprints(self, qi: int) -> dict[int, str]:
-        """Plan hash per hint for one query (cheap: planning only)."""
-        out: dict[int, str] = {}
-        build = self.queries[self.query_ids[qi]]
-        for hj, hs in enumerate(self.hint_sets):
-            key = (qi, hj)
-            if key not in self._plan_cache:
-                with H.applied(self.spark, hs):
-                    self._plan_cache[key] = plan_hash(build())
-            out[hj] = self._plan_cache[key]
-        return out
+        """Plan hash per hint for one query (planning only, one build per
+        join hint: steer.hint_plan_texts). Each cell's EXPLAIN text is kept
+        for the featurizers, so a cell is planned once per session."""
+        if (qi, 0) not in self._plan_hashes:
+            build = self.queries[self.query_ids[qi]]
+            for hj, text in enumerate(hint_plan_texts(self.spark, build, self.hint_sets)):
+                self._plan_texts[(qi, hj)] = text
+                self._plan_hashes[(qi, hj)] = plan_hash(text)
+        return {hj: self._plan_hashes[(qi, hj)] for hj in range(len(self.hint_sets))}
 
     def _features(self, qi: int, hj: int) -> np.ndarray:
         """LimeQO+ live featurization (A22/A27 on real Spark plans): parse
@@ -94,14 +94,8 @@ class LiveSteeringSession:
         node-histogram feature vector, concatenated with the hint one-hot."""
         key = (qi, hj)
         if key not in self._feature_cache:
-            build = self.queries[self.query_ids[qi]]
-            hs = self.hint_sets[hj]
-            with H.applied(self.spark, hs):
-                text = explain_formatted(build())
-            self._plan_cache.setdefault(key, plan_hash(text))
-            from limeqo_spark.plans import NODE_VOCABULARY
-
-            tree = parse_formatted_tree(text)
+            self._fingerprints(qi)
+            tree = parse_formatted_tree(self._plan_texts[key])
             plan_vec = (
                 featurize(tree)
                 if tree is not None
@@ -214,15 +208,10 @@ class LiveSteeringSession:
         the real-plan input of the live TCNN (A22/A23 on Spark plans)."""
         key = (qi, hj)
         if key not in self._tree_cache:
-            from limeqo_spark.plans import NODE_VOCABULARY
             from limeqo_spark.tcnn import flatten_tree
 
-            build = self.queries[self.query_ids[qi]]
-            hs = self.hint_sets[hj]
-            with H.applied(self.spark, hs):
-                text = explain_formatted(build())
-            self._plan_cache.setdefault(key, plan_hash(text))
-            tree = parse_formatted_tree(text)
+            self._fingerprints(qi)
+            tree = parse_formatted_tree(self._plan_texts[key])
             if tree is None:
                 d = len(NODE_VOCABULARY)
                 self._tree_cache[key] = (np.zeros((2, d)), np.zeros((2, 2), dtype=np.int64))
@@ -236,7 +225,6 @@ class LiveSteeringSession:
         every explored cell (censored hinge on timeouts), then predict the
         full Q x H matrix from each cell's own plan tree + query/hint
         embeddings. Observed cells keep their true value."""
-        from limeqo_spark.plans import NODE_VOCABULARY
         from limeqo_spark.tcnn import NumpyTCNN, collate_trees
 
         q, h = self.explored.shape
@@ -247,7 +235,7 @@ class LiveSteeringSession:
         for qi in range(q):
             for hj in range(h):
                 self._flat_tree(qi, hj)  # also fills the plan-hash cache
-                ph = self._plan_cache[(qi, hj)]
+                ph = self._plan_hashes[(qi, hj)]
                 if ph not in hash_to_id:
                     hash_to_id[ph] = len(flats)
                     flats.append(self._tree_cache[(qi, hj)])

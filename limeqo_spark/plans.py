@@ -56,15 +56,21 @@ NODE_VOCABULARY: tuple[str, ...] = (
 
 def explain_formatted(df: DataFrame) -> str:
     """EXPLAIN FORMATTED text of a DataFrame's physical plan."""
-    jdf = df._jdf
-    qe = jdf.queryExecution()
-    try:
-        jvm = df.sparkSession._jvm
-        return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-            qe, "formatted"
-        )
-    except Exception:
-        return qe.explainString(qe.explainString.__class__)  # pragma: no cover
+    # short class names resolve through the imports of PySpark's gateway
+    # (org.apache.spark.sql.api.python.*, org.apache.spark.sql.classic.*)
+    # in one py4j round trip instead of one per package segment
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def replanned(df: DataFrame) -> DataFrame:
+    """``df``'s analyzed plan in a fresh QueryExecution: Catalyst optimizes
+    and plans it again under the session's *current* confs, without
+    re-running the Python code that built it. Relation hints already in the
+    analyzed plan carry over unchanged."""
+    spark = df.sparkSession
+    # Dataset resolves to org.apache.spark.sql.classic.Dataset (see above)
+    jdf = spark._jvm.Dataset.ofRows(spark._jsparkSession, df._jdf.queryExecution().analyzed())
+    return DataFrame(jdf, spark)
 
 
 _STRIP_PATTERNS = [

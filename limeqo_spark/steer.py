@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
-from limeqo_spark.plans import explain_formatted, plan_hash
+from limeqo_spark.plans import explain_formatted, plan_hash, replanned
 
 
 @dataclass
@@ -77,6 +77,31 @@ def run_steered(
         return SteeredRun(hint_set.hint_id, elapsed, None, fp, text)
 
 
+def hint_plan_texts(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    hint_sets: list[H.HintSet],
+) -> list[str]:
+    """EXPLAIN FORMATTED text of ``build()`` under each hint set, building
+    the query once per distinct join hint.
+
+    Only a set's join hint changes the built plan (io.table tags relations
+    with it); its other levers are session confs, which Catalyst reads only
+    when it optimizes and plans. So each set re-plans the plan built for its
+    join hint under its own confs, which gives the same plan as rebuilding
+    the query under the set, for builders that do not read those confs
+    themselves.
+    """
+    built: dict[str | None, DataFrame] = {}
+    texts = []
+    for hs in hint_sets:
+        with H.applied(spark, hs):
+            if hs.join_hint not in built:
+                built[hs.join_hint] = build()
+            texts.append(explain_formatted(replanned(built[hs.join_hint])))
+    return texts
+
+
 def probe_hint_space(
     spark: SparkSession,
     build: Callable[[], DataFrame],
@@ -88,16 +113,17 @@ def probe_hint_space(
     physical plan only once (A15/A18): equivalent plans inherit the measured
     latency instead of re-running."""
     hint_sets = hint_sets if hint_sets is not None else H.REGISTRY
+    if dedup_by_plan:
+        fps = [plan_hash(t) for t in hint_plan_texts(spark, build, hint_sets)]
+    else:
+        fps = [None] * len(hint_sets)
     runs: list[SteeredRun] = []
     seen: dict[str, SteeredRun] = {}
-    for hs in hint_sets:
-        if dedup_by_plan:
-            with H.applied(spark, hs):
-                fp = plan_hash(build())
-            if fp in seen:
-                prior = seen[fp]
-                runs.append(SteeredRun(hs.hint_id, prior.latency, prior.censor_cutoff, fp, ""))
-                continue
+    for hs, fp in zip(hint_sets, fps):
+        if fp in seen:
+            prior = seen[fp]
+            runs.append(SteeredRun(hs.hint_id, prior.latency, prior.censor_cutoff, fp, ""))
+            continue
         run = run_steered(spark, build, hs, timeout_s)
         seen[run.plan_hash] = run
         runs.append(run)

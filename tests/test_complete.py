@@ -46,11 +46,11 @@ def test_log_space_pipeline_preserves_observed():
 
 
 @pytest.mark.parametrize("ds", ["job"])
-def test_reference_matrix_loads_and_completes(ds):
+def test_reference_matrix_loads_and_completes(ds, reference_dataset):
     """(c) smoke on the reference's own shipped matrix (smallest: JOB)."""
     wl = Workload.from_reference(
-        f"/root/reference/dataset/{ds}-matrix.csv",
-        f"/root/reference/dataset/init_{ds}_mask.npy",
+        f"{reference_dataset}/{ds}-matrix.csv",
+        f"{reference_dataset}/init_{ds}_mask.npy",
     )
     assert wl.matrix.shape == (113, 49)
     assert wl.mask[:, 0].all(), "default plan column must be fully observed"

@@ -270,3 +270,74 @@ def test_mixed_timeout_repeats_keep_the_completed_observation(spark, monkeypatch
     assert s.cutoffs[0, 0] == 0.0, "no censor bound when a run completed"
     obs = s.observations[-1]
     assert obs.latency == 9.0 and obs.censor_cutoff is None
+
+
+def test_fingerprint_replan_matches_rebuild(spark):
+    """The fingerprint pass builds each query once per join hint and
+    re-plans it under every hint set's confs. Each cell's hash must equal
+    the hash of the query rebuilt under that hint set, on every steering
+    shape and two manifest queries, and the pass must leave every conf the
+    registry sets as it found it."""
+    from limeqo_spark import hints as H
+    from limeqo_spark.plans import plan_hash
+    from limeqo_spark.workloads import manifest_workload, steering_workload
+
+    queries = steering_workload(spark, SF)
+    queries.update(manifest_workload(spark, SF, ["q16_tpch_q1_agg", "q47_tpch_q3_shipping"]))
+    assert len(queries) == 14
+    conf_keys = sorted({k for hs in H.REGISTRY for k in hs.confs})
+    s = LiveSteeringSession(spark, queries)
+    before = {k: spark.conf.get(k, None) for k in conf_keys}
+    fingerprints = [s._fingerprints(qi) for qi in range(len(s.query_ids))]
+    assert {k: spark.conf.get(k, None) for k in conf_keys} == before
+    for qi, qid in enumerate(s.query_ids):
+        for hj, hs in enumerate(s.hint_sets):
+            with H.applied(spark, hs):
+                rebuilt = plan_hash(queries[qid]())
+            assert fingerprints[qi][hj] == rebuilt, f"{qid} hint {hj}"
+
+
+def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
+    """One build per (query, distinct join hint) in the fingerprint pass;
+    afterwards the plan featurizers read the cached EXPLAIN text and
+    neither build nor EXPLAIN again."""
+    import limeqo_spark.live as live_mod
+    from limeqo_spark import plans, steer
+    from limeqo_spark.workloads import steering_workload
+
+    wl = steering_workload(spark, SF)
+    builds = {qid: 0 for qid in ("star_5way", "semi_anti_mix")}
+
+    def counted(qid):
+        def build():
+            builds[qid] += 1
+            return wl[qid]()
+
+        return build
+
+    s = LiveSteeringSession(spark, {qid: counted(qid) for qid in builds})
+    join_hints = {hs.join_hint for hs in s.hint_sets}
+    assert len(join_hints) == 5
+    for qi in range(len(s.query_ids)):
+        s._fingerprints(qi)
+    assert builds == {qid: len(join_hints) for qid in builds}
+
+    explains = [0]
+    orig = plans.explain_formatted
+
+    def counted_explain(df):
+        explains[0] += 1
+        return orig(df)
+
+    for mod in (plans, steer, live_mod):
+        if hasattr(mod, "explain_formatted"):
+            monkeypatch.setattr(mod, "explain_formatted", counted_explain)
+    for qid in builds:
+        builds[qid] = 0
+    for qi in range(len(s.query_ids)):
+        for hj in range(len(s.hint_sets)):
+            assert np.isfinite(s._features(qi, hj)).all()
+            feats, children = s._flat_tree(qi, hj)
+            assert len(feats) == len(children)
+    assert builds == {qid: 0 for qid in builds}
+    assert explains[0] == 0

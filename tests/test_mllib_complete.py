@@ -13,7 +13,6 @@ synthetic workload across MLlib seeds 0/1/7.
 
 from __future__ import annotations
 
-import os
 
 import numpy as np
 import pytest
@@ -23,15 +22,12 @@ from limeqo_spark.relational.registry import REGISTRY
 from limeqo_spark.strategies import MLlibLimeQOStrategy, rank_cells_by_improvement
 from limeqo_spark.workload import Workload
 
-JOB_CSV = "/root/reference/dataset/job-matrix.csv"
-JOB_MASK = "/root/reference/dataset/init_job_mask.npy"
-
-
-@pytest.mark.skipif(not os.path.exists(JOB_CSV), reason="reference dataset absent")
-def test_mllib_selections_agree_with_driver_completer_on_job(spark):
+def test_mllib_selections_agree_with_driver_completer_on_job(spark, reference_dataset):
     """On the real JOB workload matrix, MLlib's and the numpy solver's
     top-32 exploration selections must overlap >= 0.5 (measured 0.72)."""
-    wl = Workload.from_reference(JOB_CSV, JOB_MASK)
+    wl = Workload.from_reference(
+        f"{reference_dataset}/job-matrix.csv", f"{reference_dataset}/init_job_mask.npy"
+    )
     mo = np.where(wl.mask > 0, wl.matrix, np.inf).min(axis=1)
     driver_pred = complete_log_space(
         wl.matrix, wl.mask, None, rank=5, iters=50, lam=0.2, seed=0

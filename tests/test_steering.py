@@ -52,6 +52,22 @@ def test_hint_invariance_and_plan_dedup(spark):
         assert got == baseline, f"HintSet {hs.hint_id} changed query results"
 
 
+def test_probe_builds_once_per_join_hint_plus_runs(spark):
+    """The dedup pass of probe_hint_space builds the query once per distinct
+    join hint; every other build is a measured run's own."""
+    inner = join_query(spark)
+    builds = [0]
+
+    def build():
+        builds[0] += 1
+        return inner()
+
+    hint_sets = H.REGISTRY[:6] + H.REGISTRY[16:18]
+    runs = probe_hint_space(spark, build, hint_sets, timeout_s=120.0)
+    measured = sum(1 for r in runs if r.plan_text)
+    assert builds[0] == len({hs.join_hint for hs in hint_sets}) + measured
+
+
 def test_forbid_broadcast_changes_plan(spark):
     build = join_query(spark)
 

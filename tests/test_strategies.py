@@ -30,10 +30,10 @@ REQUIRED_METRIC_KEYS = {
 
 
 @pytest.fixture(scope="module")
-def job() -> Workload:
+def job(reference_dataset) -> Workload:
     return Workload.from_reference(
-        "/root/reference/dataset/job-matrix.csv",
-        "/root/reference/dataset/init_job_mask.npy",
+        f"{reference_dataset}/job-matrix.csv",
+        f"{reference_dataset}/init_job_mask.npy",
     )
 
 

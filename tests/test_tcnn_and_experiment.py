@@ -168,7 +168,7 @@ def test_numpy_tcnn_censored_hinge_respects_cutoffs():
     assert ok.mean() > 0.9, f"only {ok.mean():.2f} of censored cells clear cutoff"
 
 
-def test_censoring_sensitivity_invariants():
+def test_censoring_sensitivity_invariants(reference_dataset):
     """Censoring-sensitivity sweep (reference draw/draw_censor.ipynb): for
     every (alpha, beta) tolerance setting and for the wocensored ablation,
     curves stay monotone non-increasing and inside [opt, default]; the
@@ -192,7 +192,7 @@ def test_censoring_sensitivity_invariants():
     assert finals["default"] <= finals["wocensored"] * 1.15
 
 
-def test_datashift_newquery_reconverges():
+def test_datashift_newquery_reconverges(reference_dataset):
     """Datashift golden (reference experiment/stack-datashift + the
     draw_newquery analysis): explore 80% of JOB, inject the held-out 20%
     with only their defaults observed. The curve must jump UP at injection
@@ -219,7 +219,7 @@ def test_datashift_newquery_reconverges():
     assert all(b <= a + 1e-9 for a, b in zip(lat[ir:], lat[ir + 1 :]))
 
 
-def test_limeqo_plus_tcnn_mode_on_job_matrix():
+def test_limeqo_plus_tcnn_mode_on_job_matrix(reference_dataset):
     """Sim LimeQO+ with model='tcnn' (embeddings-only NumpyTCNN) keeps the
     reference invariants on the JOB matrix: curve bounded by [opt,
     default], monotone non-increasing total latency."""
@@ -235,7 +235,7 @@ def test_limeqo_plus_tcnn_mode_on_job_matrix():
     assert lat[-1] < wl.default_time  # made real progress
 
 
-def test_limeqo_plus_tcnn_pinned_init_is_deterministic():
+def test_limeqo_plus_tcnn_pinned_init_is_deterministic(reference_dataset):
     """With ``net_seed`` pinned, the model='tcnn' run must be bitwise
     deterministic across exploration seeds: the improvement ranking fills
     every batch so the strategy rng never fires (the property the bench's
@@ -270,7 +270,7 @@ def test_torch_tcnn_forward():  # pragma: no cover
     assert out.shape == (1,)
 
 
-def test_run_experiment_suite(tmp_path):
+def test_run_experiment_suite(tmp_path, reference_dataset):
     wl = load_dataset("job")
     finals = run_suite(
         wl, str(tmp_path), ["oracle", "limeqo"], reps=2, k=8, budget=90.0
@@ -282,7 +282,7 @@ def test_run_experiment_suite(tmp_path):
     assert (tmp_path / "result.csv").exists()  # A34 checkpoint table
 
 
-def test_simulation_parity_vs_baseline_checkpoints():
+def test_simulation_parity_vs_baseline_checkpoints(reference_dataset):
     """BENCH track 1 (BASELINE.md): LimeQO on the JOB matrix must land
     within 2x of the published checkpoint curve (reference: 112.4 s total
     workload latency after 90 s exploration; 71.8 s after 720 s)."""
@@ -317,7 +317,7 @@ def test_report_pipeline(tmp_path):
     assert (tmp_path / "result.csv").read_text().startswith("exploration_time,demo,absent")
 
 
-def test_report_on_real_experiment(tmp_path):
+def test_report_on_real_experiment(tmp_path, reference_dataset):
     """End-to-end: run_experiment -> report; LimeQO's curve must be
     monotone non-increasing and bounded by [opt, default]."""
     from limeqo_spark.report import checkpoint_table
@@ -353,7 +353,7 @@ def test_live_experiment_cli(tmp_path, spark):
     assert (tmp_path / "live_summary.json").exists()
 
 
-def test_stack_dataset_mask_facts_and_missing_matrix():
+def test_stack_dataset_mask_facts_and_missing_matrix(reference_dataset):
     """The reference ships the Stack mask but its matrix CSV is a missing
     large blob: loading must fail with a message that says so, and the
     mask itself must match the published facts (BASELINE.md: 6191x49,
@@ -365,7 +365,7 @@ def test_stack_dataset_mask_facts_and_missing_matrix():
 
     with pytest.raises(FileNotFoundError, match="missing large blob"):
         load_dataset("stack")
-    m = np.load("/root/reference/dataset/init_stack_mask.npy")
+    m = np.load(f"{reference_dataset}/init_stack_mask.npy")
     assert m.shape == (6191, 49)
     assert (m[:, 0] == 1).all()
     assert 0.09 < m.mean() < 0.13

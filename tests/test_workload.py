@@ -10,10 +10,10 @@ from limeqo_spark.workload import Workload
 
 
 @pytest.fixture(scope="module")
-def job():
+def job(reference_dataset):
     return Workload.from_reference(
-        "/root/reference/dataset/job-matrix.csv",
-        "/root/reference/dataset/init_job_mask.npy",
+        f"{reference_dataset}/job-matrix.csv",
+        f"{reference_dataset}/init_job_mask.npy",
     )
 
 
