@@ -3,16 +3,19 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the simulation-mode
 LimeQO run on the reference JOB matrix (BASELINE.md track 1).
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Each run appends its full record to ``docs/bench/<round>-cpus<N>-<sf>.jsonl``
+and prints ONE compact JSON line naming that file and line. Compare runs
+with :func:`clean_runs` over one such file.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -37,8 +40,62 @@ CAL_CONTENDED_RATIO = 1.3
 REP_HOT_RATIO = 1.5
 #: attempt ceiling per query when hot reps force retries (3 normal + 3 spare)
 MAX_ATTEMPTS = 6
-#: round tag for the on-disk full payload (docs/bench_full_<tag>.json)
+#: round tag, the first part of a run's record key (round, cpus, sf)
 ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND", "r12")
+DOCS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "docs")
+
+
+def record_path(docs_dir: str, round_tag: str, cpus: int, sf_dir: str) -> str:
+    """The append-only file of one (round, cpus, sf) key."""
+    sf = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(docs_dir, "bench", f"{round_tag}-cpus{cpus}-{sf}.jsonl")
+
+
+def append_run(docs_dir: str, record: dict) -> tuple[str, int]:
+    """Append ``record`` plus ``commit`` and a UTC ``finished_at`` as one JSON
+    line to its key's file; return the file and the line's number. The file
+    is only ever opened to append, and no earlier record is parsed."""
+    path = record_path(docs_dir, record["round"], record["cpus"], record["sf"])
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    try:
+        commit = subprocess.run(["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+                                cwd=os.path.dirname(DOCS_DIR)).stdout.strip() or None
+    except OSError:
+        commit = None
+    finished_at = datetime.now(timezone.utc).isoformat(timespec="seconds")
+    with open(path, "a") as f:
+        f.write(json.dumps({**record, "commit": commit, "finished_at": finished_at}) + "\n")
+    with open(path, "rb") as f:
+        return path, sum(block.count(b"\n") for block in iter(lambda: f.read(1 << 16), b""))
+
+
+def clean_runs(path: str) -> list[dict]:
+    """The records of one key whose own calibration says uncontended, in
+    append order. A filter only: which run to compare is the caller's call."""
+    with open(path) as f:
+        runs = [json.loads(line) for line in f if line.strip()]
+    return [r for r in runs if r.get("calibration", {}).get("contended") is False]
+
+
+def compact_line(record: dict, path: str, line_no: int) -> dict:
+    """The printed summary of a run: the headline, its contention, the
+    per-query medians, the sim scalars or the sim error, and the file and
+    line holding the full record (stdout readers may keep only a tail)."""
+    cal = record["calibration"]
+    line = {k: record[k] for k in ("metric", "value", "unit")}
+    line.update(
+        cal_ratio=cal["cal_ratio"],
+        contended=cal["contended"],
+        queries_with_hot_reps=cal["queries_with_hot_reps"],
+        queries_contended=cal["queries_contended"],
+        queries={k: v for k, v in record["queries"].items() if not k.startswith("sim_")},
+        sf=record["sf"],
+        record=path,
+        record_line=line_no,
+        sim_error=record["sim_error"],
+    )
+    line.update({k: v for k, v in record.items() if k.startswith("sim_") and isinstance(v, (int, float))})
+    return line
 
 
 def cpu_calibration_token(reps: int = 3) -> float:
@@ -252,16 +309,14 @@ def main() -> None:
     # Baselines to beat: JOB@90s -> 112.4 s; CEB@0.75h -> 1.615 h
     # (default 181 s / 2.94 h).
     sim: dict[str, float] = {}
+    sim_error: str | None = None
     try:
         if os.environ.get("SPARK_GRAFT_SKIP_SIM"):
             raise RuntimeError("sim track skipped via SPARK_GRAFT_SKIP_SIM")
+        from limeqo_spark.run_experiment import load_dataset
         from limeqo_spark.strategies import LimeQOStrategy
-        from limeqo_spark.workload import Workload
 
-        wl = Workload.from_reference(
-            "/root/reference/dataset/job-matrix.csv",
-            "/root/reference/dataset/init_job_mask.npy",
-        )
+        wl = load_dataset("job")
         t0 = time.perf_counter()
         rec = LimeQOStrategy(wl, k=8, seed=1, max_rounds=200, time_budget=90.0).run()
         timings["sim_job_limeqo"] = round(time.perf_counter() - t0, 3)
@@ -292,10 +347,7 @@ def main() -> None:
             float(rec[-1]["total_latency"]), 2
         )  # baseline LimeQO+@90s: 109.3 s
 
-        wl_ceb = Workload.from_reference(
-            "/root/reference/dataset/ceb-matrix.csv",
-            "/root/reference/dataset/init_ceb_mask.npy",
-        )
+        wl_ceb = load_dataset("ceb")
         t0 = time.perf_counter()
         rec = LimeQOStrategy(
             wl_ceb, k=8, seed=1, max_rounds=100_000, time_budget=0.75 * 3600
@@ -307,20 +359,11 @@ def main() -> None:
 
         t0 = time.perf_counter()
         # baseline CEB@0.75h: LimeQO 1.615 h, LimeQO+ 1.293 h. Primary
-        # config: the executed NumpyTCNN with the censored hinge loss.
-        # Round-4 change: the headline is the MEDIAN over five fixed,
-        # unselected weight inits (net_seed 0..4) — the r3 number pinned
-        # the best seed of a published sweep, which is mild
-        # eval-overfitting even when disclosed. All five per-init values
-        # ship in the full payload; the init-free ALS row below is the
-        # seed-free robustness comparison.
-        # r11 (VERDICT r10 #6): restart-averaged TCNN — 3 independent
-        # inits per run, predictions averaged (n_nets=3). Config chosen by
-        # the 4-config x 5-fixed-init sweep in docs/tcnn_ensemble_lab_r11
-        # .json: median 1.3745 -> 1.3267 h, worst 1.4555 -> 1.3708 h
-        # (ens5 had a 1.98 h diverged seed; ens3_median a 1.46 h one —
-        # ens3_mean is best on median AND worst). Methodology unchanged:
-        # median over the five fixed unselected base inits.
+        # config: the executed NumpyTCNN (censored hinge loss) averaging 3
+        # restarts (n_nets=3, chosen by the sweep frozen in
+        # docs/tcnn_ensemble_lab_r11.json). The headline is the median over
+        # five fixed, unselected base inits (net_seed 0..4), all shipped in
+        # the record; the init-free ALS row below is the seed-free check.
         tcnn_by_init = {}
         for net_seed in range(5):
             rec = LimeQOPlusStrategy(
@@ -348,10 +391,7 @@ def main() -> None:
             float(rec[-1]["total_latency"]) / 3600, 4
         )
 
-        wl_dsb = Workload.from_reference(
-            "/root/reference/dataset/dsb-matrix.csv",
-            "/root/reference/dataset/init_dsb_mask.npy",
-        )
+        wl_dsb = load_dataset("dsb")
         t0 = time.perf_counter()
         rec = LimeQOStrategy(
             wl_dsb, k=8, seed=1, max_rounds=100_000, time_budget=1.19 * 3600
@@ -405,16 +445,12 @@ def main() -> None:
         a = set(rank_cells_by_improvement(npy_pred, wl_dsb.mask, mo, k))
         b = set(rank_cells_by_improvement(mll.pred, wl_dsb.mask, mo, k))
         sim["sim_dsb_mllib_agreement_k32"] = round(len(a & b) / max(len(a), 1), 4)
-    except Exception:  # sim track must never sink the bench line
-        pass
+    except Exception as e:  # sim track must never sink the bench line
+        sim_error = f"{type(e).__name__}: {e}"
 
     # headline value = query-engine wall only; the sim_* rows are SOLVER
-    # overhead (the reference reports these separately too — BASELINE.md:
-    # ALS ~0.18 s/round, LimeQO+ ~2 h/run) and are summed on their own so
-    # adding solver robustness rows never reads as a query regression.
-    # The metric is RENAMED (was headline_total_wall = queries + sim) so
-    # cross-round dashboards can't silently compare the two definitions;
-    # legacy_total_wall carries the old sum for continuity.
+    # overhead (BASELINE.md reports them separately too), summed on their
+    # own; legacy_total_wall keeps the older queries + sim sum.
     total = round(sum(v for k, v in timings.items() if not k.startswith("sim_")), 3)
     sim_total = round(sum(v for k, v in timings.items() if k.startswith("sim_")), 3)
     # close-out calibration: the worst of the start/end tokens decides the
@@ -488,29 +524,17 @@ def main() -> None:
         "calibration": calibration,
         "sf": SF_DIR,
         "cpus": CPUS,
+        "round": ROUND_TAG,
     }
-    # host-normalized headline (VERDICT r9 #4): three rounds of driver
-    # artifacts measured the calibration token at ~2x the reference
-    # constant even idle — host-class throughput, not transient load. So
-    # the committed artifact carries headline_s / cal_ratio as a
-    # cross-host-comparable series next to the raw number. Denominator is
-    # clamped at 1.0 (a faster-than-reference token never inflates it),
-    # and the number is emitted only while cal_ratio <= 4: the linear
-    # correction models steady host-class slowness, not a contention
-    # spike — dividing a 35x-token run's wall by 35 produced a
-    # physically impossible 1.9 s "normalized headline" in testing, so
-    # past the regime bound the field is null and the raw number +
-    # contended flag stand alone.
-    # basis: the median per-rep token ratio (the load queries actually saw),
-    # not max(start, end) — see all_rep_tokens above
-    norm = (
-        round(total / max(median_rep_ratio, 1.0), 3)
-        if median_rep_ratio <= 4.0
-        else None
-    )
+    # host-normalized headline: wall / median per-rep token ratio, a
+    # cross-host series for steady host-class slowness. The denominator is
+    # clamped at 1.0, and past a ratio of 4 (a contention spike, not a slow
+    # host) the linear correction is meaningless, so the field is null.
+    norm = round(total / max(median_rep_ratio, 1.0), 3) if median_rep_ratio <= 4.0 else None
     full["headline_host_normalized_s"] = norm
     full["headline_host_normalized_basis"] = "median_rep_ratio"
     full.update(sim)
+    full["sim_error"] = sim_error
     if sim:
         # published reference checkpoints (BASELINE.md) next to our numbers,
         # same keys minus the prefix, so the comparison is self-contained
@@ -527,134 +551,8 @@ def main() -> None:
             "dsb_limeqo_plus_at_1.19h": 3.407,
             "dsb_default_h": 4.75,
         }
-    # full payload to disk; the PRINTED line stays compact — the driver
-    # keeps only a tail window of stdout and r3's all-in-one line was
-    # truncated mid-dict ("parsed": null). Headline value + the sim
-    # checkpoint scalars fit comfortably; everything else is on disk.
-    os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)), "docs"), exist_ok=True)
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "docs", f"bench_full_{ROUND_TAG}.json"
-    )
-    # never REPLACE a better same-tag artifact with a more-contended rerun
-    # (r7: a cal-5.36 driver run overwrote the committed uncontended
-    # payload in the working tree); the hot rerun goes to a .contended
-    # side file so nothing is hidden, and the best clean run survives.
-    if os.path.exists(full_path):
-        try:
-            with open(full_path) as f:
-                prior = json.load(f).get("calibration", {})
-        except Exception:
-            prior = None
-        if prior is not None:
-            # `or` (not .get default): a stored `"cal_ratio": null` must
-            # still fall through to inf, not None (ADVICE r9)
-            prior_bad = (len(prior.get("queries_contended", [])), prior.get("cal_ratio") or float("inf"))
-            this_bad = (len(unmeasurable), cal_ratio)
-            if this_bad > prior_bad:
-                full_path = full_path.replace(".json", ".contended.json")
-                full["kept_aside_because"] = (
-                    f"more contended than existing artifact (this {this_bad} vs prior {prior_bad})"
-                )
-            else:
-                # this run takes over the primary slot: keep the displaced
-                # payload as a side file instead of silently dropping it
-                # (r11: a query-only rerun overwrote the sim-bearing run's
-                # payload — the sim rows existed nowhere else on disk)
-                os.replace(
-                    full_path, full_path.replace(".json", ".superseded.json")
-                )
-    with open(full_path, "w") as f:
-        json.dump(full, f, indent=1)
-        f.write("\n")
-    compact = {
-        "metric": "headline_query_wall",
-        "value": total,
-        "unit": "sec",
-        "cal_ratio": cal_ratio,
-        "contended": calibration["contended"],
-        "queries_with_hot_reps": len(query_contention),
-        "queries_contended": unmeasurable,
-        "queries": {k: v for k, v in timings.items() if not k.startswith("sim_")},
-        "sf": SF_DIR,
-        "full_payload": os.path.join("docs", os.path.basename(full_path)),
-    }
-    # the printed line carries ONLY the measured number as the headline
-    # (VERDICT r10 #2): the host-normalized figure is an estimate (wall /
-    # median rep token ratio), so it lives in the full payload, clearly
-    # subordinate, instead of next to `value` where a reader grabs it
-    # self-contained contention handling (VERDICT r8 #4): when THIS run is
-    # contended, the committed BENCH_rN.json must still carry the clean
-    # headline a judge should compare against — find the least-contended
-    # full payload on disk over the SAME query set/SF (same tag preferred,
-    # else any round) and embed its headline + pointer, so nobody has to
-    # open docs/ to un-skew the round-over-round signal.
-    if calibration["contended"]:
-        docs_dir = os.path.dirname(full_path)
-        best = None
-        for fn in sorted(os.listdir(docs_dir)):
-            if not (fn.startswith("bench_full_") and fn.endswith(".json")):
-                continue
-            # SAME-round payloads only (VERDICT r10 #2): the cross-round
-            # carry-forward kept presenting a two-round-old r8 number as
-            # the "clean" headline; a judge comparing rounds should see
-            # either THIS round's uncontended measurement or nothing —
-            # the measured `value` stands alone when the host never goes
-            # quiet within the round.
-            if fn != f"bench_full_{ROUND_TAG}.json":
-                continue
-            try:
-                with open(os.path.join(docs_dir, fn)) as f:
-                    cand = json.load(f)
-            except Exception:
-                continue
-            cal = cand.get("calibration", {})
-            if cand.get("sf") != SF_DIR or cal.get("contended", True):
-                continue
-            same_queries = set(cand.get("queries", {})) >= {
-                k for k in timings if not k.startswith("sim_")
-            }
-            if not same_queries:
-                continue
-            key = (
-                0 if fn == f"bench_full_{ROUND_TAG}.json" else 1,
-                len(cal.get("queries_contended", [])),
-                cal.get("cal_ratio") or float("inf"),
-            )
-            if best is None or key < best[0]:
-                best = (key, fn, cand)
-        if best is not None:
-            _, fn, cand = best
-            # sum only the INTERSECTION with this run's query set (ADVICE
-            # r9): the superset match above admits payloads carrying
-            # queries this run never ran; including them would skew the
-            # "clean" headline the judge compares against
-            clean_total = round(
-                sum(
-                    v
-                    for k, v in cand["queries"].items()
-                    if k in timings and not k.startswith("sim_")
-                ),
-                3,
-            )
-            compact["headline_clean_s"] = clean_total
-            compact["clean_payload"] = os.path.join("docs", fn)
-            compact["clean_cal_ratio"] = cand.get("calibration", {}).get("cal_ratio")
-            # label the carry-forward (VERDICT r10 #2): `value` above is
-            # THE headline (measured this run); headline_clean_s is a
-            # PRIOR run's uncontended measurement embedded for reference
-            compact["headline_clean_note"] = (
-                "carried forward from a prior uncontended run "
-                f"({fn}); `value` is this round's measured headline"
-            )
-            full["headline_clean_s"] = clean_total
-            full["clean_payload"] = os.path.join("docs", fn)
-            full["headline_clean_note"] = compact["headline_clean_note"]
-            with open(full_path, "w") as f:
-                json.dump(full, f, indent=1)
-                f.write("\n")
-        f.write("\n")
-    compact.update({k: v for k, v in sim.items() if isinstance(v, (int, float))})
-    print(json.dumps(compact))
+    path, line_no = append_run(DOCS_DIR, full)
+    print(json.dumps(compact_line(full, os.path.relpath(path, os.path.dirname(DOCS_DIR)), line_no)))
     sys.stdout.flush()
     spark.stop()
 

@@ -4,11 +4,9 @@ entry — relational surface, pipeline operators, streaming — into
 
 import limeqo_spark.pipeline  # noqa: F401
 import limeqo_spark.relational  # noqa: F401
-
-try:  # streaming queries register themselves; keep import-gated during build
-    import limeqo_spark.streaming  # noqa: F401
-except ImportError:  # pragma: no cover
-    pass
+# streaming gates its own optional dependency (protobuf); a failed import
+# must fail loudly instead of unregistering every streaming entry
+import limeqo_spark.streaming  # noqa: F401
 
 from limeqo_spark.relational.registry import REGISTRY, QuerySpec  # noqa: F401
 

@@ -382,40 +382,24 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("probe_id", "vec_id")
         .agg(F.min("cos").alias("cos"))
     )
-    return _topk_with_ok(cand, with_ok=False)
+    return _ann_topk(cand)
 
 
-def _topk_with_ok(cand: DataFrame, k: int = 5, with_ok: bool = True) -> DataFrame:
-    """Shared ANN top-k tail. ``with_ok`` rides a self-asserting ``ok``
-    column along (cosine in [-1, 1] and non-increasing down each probe's
-    ranking) — the r5-r8 PROP-era compensator, kept for ad-hoc callers;
-    as of r9 every registered ANN entry is HASH (pinned centroids +
-    codebooks) and passes with_ok=False — the exact-value oracle subsumes
-    the self-assertion and the compare needs identical schemas."""
+def _ann_topk(cand: DataFrame, k: int = 5) -> DataFrame:
+    """Shared ANN top-k tail: each probe's ``k`` best candidates by cosine
+    (ties by ``vec_id``), ranked and rounded for the exact-value oracle.
+    The window stays rank-only (a lag over it would block Spark's
+    InsertWindowGroupLimit), so a map-side partial top-k runs before the
+    exchange (plan shows WindowGroupLimit Partial) and the shuffle never
+    carries the whole candidate set."""
     w = W.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    # rank-ONLY window first, lag second: a window mixing row_number with
-    # lag blocks Spark's InsertWindowGroupLimit rule, so the rank filter
-    # could not push a map-side partial top-k and the shuffle carried the
-    # whole candidate set. Filtering rn <= k first restores the pushdown
-    # (plan shows WindowGroupLimit Partial before the exchange); the lag
-    # over the k-per-probe survivor frame computes the SAME values — each
-    # kept row's predecessor in the full ordering is also kept (rn-1 < k),
-    # and rn=1 uses the same default.
     ranked = cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-    cols = [
+    return ranked.select(
         "probe_id",
         "vec_id",
         F.col("rn").cast("bigint").alias("rn"),
         F.round("cos", 4).alias("cos_sim"),
-    ]
-    if with_ok:
-        ranked = ranked.withColumn(
-            "ok",
-            F.col("cos").between(-1.0 - 1e-9, 1.0 + 1e-9)
-            & (F.col("cos") <= F.lag("cos", 1, 1.0).over(w) + 1e-9),
-        )
-        cols.append("ok")
-    return ranked.select(*cols).orderBy("probe_id", "rn")
+    ).orderBy("probe_id", "rn")
 
 
 # ---------------------------------------------------------------------------
@@ -746,7 +730,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(pe_df), "probe_id")
         .withColumn("cos", F.expr(_cosine_expr()))
     )
-    return _topk_with_ok(cand, with_ok=False)
+    return _ann_topk(cand)
 
 
 _IVFPQ_LAYOUT_CACHE: dict[str, str] = {}
@@ -1029,7 +1013,7 @@ def ann_ivfpq_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(pe_df), "probe_id")
         .withColumn("cos", F.expr(_cosine_expr()))
     )
-    return _topk_with_ok(cand, with_ok=False)
+    return _ann_topk(cand)
 
 
 _IVF_LAYOUT_CACHE: dict[str, str] = {}
@@ -1109,7 +1093,7 @@ def ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("probe_id", "vec_id")
         .agg(F.min("cos").alias("cos"))
     )
-    return _topk_with_ok(cand, with_ok=False)
+    return _ann_topk(cand)
 
 
 

@@ -26,8 +26,12 @@ REFERENCE_DATASET_DIR = "/root/reference/dataset"
 
 
 def load_dataset(name: str) -> Workload:
+    if not os.path.isdir(REFERENCE_DATASET_DIR):
+        raise FileNotFoundError(
+            f"reference dataset absent: no directory {REFERENCE_DATASET_DIR}"
+        )
     matrix = f"{REFERENCE_DATASET_DIR}/{name}-matrix.csv"
-    if not os.path.exists(matrix):
+    if name == "stack" and not os.path.exists(matrix):
         # the reference ships init_stack_mask.npy (6191x49) but its matrix
         # CSV is a missing large blob in the snapshot — simulation needs
         # the measured latencies, so say exactly that instead of crashing

@@ -1,14 +1,14 @@
-"""Tree-convolution cost model (SURVEY A21-A27) with a numpy fallback.
+"""Tree-convolution cost model (SURVEY A21-A27) and a ridge fallback, in numpy.
 
 The reference's LimeQO+ trains a tree-CNN over EXPLAIN plan trees
 (tcnn.py / limeqo_plus.py in /root/reference): per-node feature vectors,
 tree convolution over (node, left-child, right-child) triples, dynamic
-max-pool, query/hint embeddings, MLP head, censored MSE loss. Torch is not
-present in this container, so:
+max-pool, query/hint embeddings, MLP head, censored MSE loss. Here, in
+numpy only:
 
-  - :func:`flatten_tree` / :class:`TorchTCNN` implement the full model,
-    import-gated behind torch (usable where torch exists);
-  - :class:`RidgeCostModel` is the always-available fallback: plan-level
+  - :func:`flatten_tree` / :class:`NumpyTCNN` implement the full model
+    with explicit forward/backward passes;
+  - :class:`RidgeCostModel` is the lightweight fallback: plan-level
     features (node-type histogram from plans.featurize) + hint one-hot,
     fit by ridge regression with the same hinge-censoring iteration
     (censored targets are raised to their cutoff whenever the model
@@ -22,14 +22,6 @@ from dataclasses import dataclass
 import numpy as np
 
 from limeqo_spark.plans import NODE_VOCABULARY, PlanNode, binarize
-
-try:  # pragma: no cover - torch not in the build container
-    import torch
-    from torch import nn
-
-    HAS_TORCH = True
-except ImportError:
-    HAS_TORCH = False
 
 
 def flatten_tree(root: PlanNode) -> tuple[np.ndarray, np.ndarray]:
@@ -57,55 +49,6 @@ def flatten_tree(root: PlanNode) -> tuple[np.ndarray, np.ndarray]:
     return np.asarray(feats, dtype=np.float32), np.asarray(children, dtype=np.int64)
 
 
-if HAS_TORCH:  # pragma: no cover - torch not in the build container
-
-    class TreeConv(nn.Module):
-        """One tree-convolution block: gather (node, left, right) per node,
-        1-D conv with kernel 3 / stride 3 == a dense layer over the triple."""
-
-        def __init__(self, in_dim: int, out_dim: int) -> None:
-            super().__init__()
-            self.conv = nn.Conv1d(in_dim, out_dim, kernel_size=3, stride=3)
-
-        def forward(self, feats: torch.Tensor, child_idx: torch.Tensor) -> torch.Tensor:
-            # feats: (batch, n, d); child_idx: (batch, n, 2)
-            b, n, d = feats.shape
-            left = torch.gather(feats, 1, child_idx[:, :, 0:1].expand(b, n, d))
-            right = torch.gather(feats, 1, child_idx[:, :, 1:2].expand(b, n, d))
-            triples = torch.stack([feats, left, right], dim=2).reshape(b, n * 3, d)
-            out = self.conv(triples.transpose(1, 2)).transpose(1, 2)
-            return torch.relu(out)
-
-    class TorchTCNN(nn.Module):
-        """Tree-CNN cost model: 2 tree-conv blocks -> dynamic max pool ->
-        concat query/hint embeddings -> MLP -> latency (log space)."""
-
-        def __init__(self, n_features: int, n_queries: int, n_hints: int, rank: int = 8):
-            super().__init__()
-            self.c1 = TreeConv(n_features, 256)
-            self.c2 = TreeConv(256, 128)
-            self.norm = nn.LayerNorm(128)
-            self.q_emb = nn.Embedding(n_queries, rank)
-            self.h_emb = nn.Embedding(n_hints, rank)
-            self.head = nn.Sequential(
-                nn.Linear(128 + 2 * rank, 32), nn.ReLU(), nn.Linear(32, 16), nn.ReLU(), nn.Linear(16, 1)
-            )
-
-        def forward(self, feats, child_idx, q_idx, h_idx):
-            x = self.c2(self.c1(feats, child_idx), child_idx)
-            pooled = self.norm(x.max(dim=1).values)
-            z = torch.cat([pooled, self.q_emb(q_idx), self.h_emb(h_idx)], dim=1)
-            return self.head(z).squeeze(-1)
-
-    def censored_mse_loss(pred, target, cutoff):
-        """Hinge censoring: censored rows (cutoff > 0) incur loss only when
-        the prediction falls below the cutoff."""
-        censored = cutoff > 0
-        mse = (pred - target) ** 2
-        hinge = torch.clamp(cutoff - pred, min=0.0) ** 2
-        return torch.where(censored, hinge, mse).mean()
-
-
 class NumpyTCNN:
     """Tree-CNN cost model with explicit numpy forward/backward — the
     torch-free realization of the reference's TCNN (SURVEY A21/A24-A26;
@@ -113,16 +56,16 @@ class NumpyTCNN:
     loop ``src/strategies/limeqo_plus.py:193-234``, censored loss semantics
     ``limeqo_plus.py:263-268``).
 
-    Architecture (mirrors :class:`TorchTCNN` above): two tree-convolution
+    Architecture (mirrors the reference's torch TCNN): two tree-convolution
     blocks — gather (node, left, right) triples, dense over the
     concatenated triple (== Conv1d kernel 3 stride 3), ReLU — then dynamic
     max-pool over nodes, LayerNorm, concat query/hint embeddings, and a
-     32-16-1 MLP head. Deviations from the torch version, both documented:
+    32-16-1 MLP head. Deviations from the reference, both documented:
     no dropout (deterministic numpy training; the reference uses p=0.3),
     and the censored loss is the hinge form (censored rows only penalize
     predictions below their cutoff) rather than the reference's
     mse-vs-revealed-label variant, matching this repo's
-    ``censored_mse_loss`` / ``RidgeCostModel``.
+    ``RidgeCostModel``.
 
     Samples reference *unique trees* by id: ``fit``/``predict`` take the
     stacked unique-tree tensors plus a per-sample ``tree_id``. The conv

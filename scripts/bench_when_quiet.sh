@@ -3,11 +3,21 @@
 # start the run only after 3 consecutive sub-threshold readings (this
 # host's contention arrives in 5-15 min waves — ROUND11.md). Repeats
 # until an attempt lands with cal_ratio below the target or attempts run
-# out. Queries-phase cleanliness is what matters; the keep-best logic in
-# bench.py adjudicates which payload becomes primary.
+# out. Every attempt appends its own record to bench.py's (round, cpus, sf)
+# file; an attempt counts as landed when it added a clean run
+# (bench.clean_runs) whose sim track ran.
 cd "$(dirname "$0")/.."
 THRESH="${THRESH:-2.2}"
 ATTEMPTS="${ATTEMPTS:-3}"
+RECORD=$(python -c "
+import bench
+print(bench.record_path(bench.DOCS_DIR, bench.ROUND_TAG, bench.CPUS, bench.SF_DIR))")
+clean_sim_runs() {
+  python -c "
+import os, bench
+runs = bench.clean_runs('$RECORD') if os.path.exists('$RECORD') else []
+print(sum(1 for r in runs if r.get('sim_error') is None))"
+}
 for a in $(seq 1 "$ATTEMPTS"); do
   echo "[watcher] attempt $a: waiting for quiet window (token < ${THRESH}x)"
   quiet=0
@@ -24,19 +34,10 @@ print(cpu_calibration_token(reps=1)/CAL_REF_S)" 2>/dev/null)
   done
   if [ "$quiet" -lt 3 ]; then echo "[watcher] no quiet window found"; continue; fi
   echo "[watcher] launching bench (attempt $a)"
+  before=$(clean_sim_runs)
   python bench.py > "/tmp/bench_attempt_$a.log" 2>&1
-  TAG=$(python -c "import bench; print(bench.ROUND_TAG)")
-  cal=$(python -c "
-import json
-d = json.load(open('docs/bench_full_$TAG.json'))
-c = d['calibration']
-print(c['cal_ratio'], len(c['queries_contended']), d['value'])")
-  echo "[watcher] attempt $a primary now: cal/contended/value = $cal"
-  good=$(python -c "
-import json
-d = json.load(open('docs/bench_full_$TAG.json'))
-c = d['calibration']
-print(1 if c['cal_ratio'] < 2.0 and not c['queries_contended'] and 'sim_job_limeqo_final_latency' in d else 0)")
-  if [ "$good" = "1" ]; then echo "[watcher] clean full run landed"; break; fi
+  after=$(clean_sim_runs)
+  echo "[watcher] attempt $a: $RECORD holds $after clean runs with a sim track (was $before)"
+  if [ "$after" -gt "$before" ]; then echo "[watcher] clean full run landed"; break; fi
 done
 echo "[watcher] done"

@@ -1,0 +1,78 @@
+"""bench.py's run-record store: one append-only JSONL file per (round, cpus,
+sf) key, and the clean-run filter that reads it. No Spark needed."""
+
+from __future__ import annotations
+
+import json
+
+import bench
+
+
+def _record(cpus: int, value: float, contended: bool, round_tag: str = "rt") -> dict:
+    return {
+        "metric": "headline_query_wall",
+        "value": value,
+        "unit": "sec",
+        "queries": {"q01": value},
+        "calibration": {
+            "cal_ratio": 2.5 if contended else 0.9,
+            "contended": contended,
+            "queries_with_hot_reps": 1 if contended else 0,
+            "queries_contended": ["q01"] if contended else [],
+        },
+        "sf": "/data/sf0.1",
+        "cpus": cpus,
+        "round": round_tag,
+        "sim_error": "FileNotFoundError: reference dataset absent",
+    }
+
+
+def test_core_counts_get_separate_files_and_appends_leave_others_alone(tmp_path):
+    p4, n4 = bench.append_run(str(tmp_path), _record(4, 10.0, False))
+    before4 = open(p4, "rb").read()
+    p32, n32 = bench.append_run(str(tmp_path), _record(32, 20.0, False))
+    assert p4 != p32
+    assert p4.endswith("bench/rt-cpus4-sf0.1.jsonl")
+    assert p32.endswith("bench/rt-cpus32-sf0.1.jsonl")
+    assert (n4, n32) == (1, 1)
+    assert open(p4, "rb").read() == before4
+    before32 = open(p32, "rb").read()
+    bench.append_run(str(tmp_path), _record(4, 11.0, False))
+    assert open(p32, "rb").read() == before32
+
+
+def test_second_append_keeps_earlier_bytes_as_prefix(tmp_path):
+    path, first = bench.append_run(str(tmp_path), _record(8, 10.0, False))
+    before = open(path, "rb").read()
+    same, second = bench.append_run(str(tmp_path), _record(8, 12.0, True))
+    after = open(path, "rb").read()
+    assert same == path
+    assert (first, second) == (1, 2)
+    assert after.startswith(before) and len(after) > len(before)
+    lines = after.decode().splitlines()
+    assert len(lines) == 2
+    rec = json.loads(lines[1])
+    assert rec["value"] == 12.0
+    assert rec["commit"] is None or len(rec["commit"]) == 40
+    assert rec["finished_at"].endswith("+00:00")
+
+
+def test_contended_record_appends_and_prints(tmp_path, capsys):
+    record = _record(4, 30.0, True)
+    path, line_no = bench.append_run(str(tmp_path), record)
+    print(json.dumps(bench.compact_line(record, path, line_no)))
+    printed = json.loads(capsys.readouterr().out.strip())
+    assert printed["contended"] is True
+    assert printed["record"] == path and printed["record_line"] == 1
+    assert printed["sim_error"].startswith("FileNotFoundError: ")
+    assert json.loads(open(path).read())["value"] == 30.0
+
+
+def test_clean_runs_returns_exactly_the_uncontended_records_of_the_key(tmp_path):
+    values = [(10.0, False), (30.0, True), (12.0, False), (31.0, True)]
+    for value, contended in values:
+        path, _ = bench.append_run(str(tmp_path), _record(32, value, contended))
+    bench.append_run(str(tmp_path), _record(8, 9.0, False))
+    bench.append_run(str(tmp_path), _record(32, 8.0, False, round_tag="other"))
+    assert [r["value"] for r in bench.clean_runs(path)] == [10.0, 12.0]
+    assert all(r["cpus"] == 32 for r in bench.clean_runs(path))

@@ -70,8 +70,8 @@ def test_ann_topk_window_rank_limit_pushes_down(spark):
     """The per-probe top-k windows must get Spark's WindowGroupLimit
     (map-side partial rank limit before the exchange) — a window mixing
     row_number with lag blocks the rule and the shuffle carries the whole
-    candidate set (caught r8 on ann_ivf_topk; _topk_with_ok now filters
-    on the rank-only window first and lags over the survivors)."""
+    candidate set (caught r8 on ann_ivf_topk; _ann_topk keeps its window
+    rank-only)."""
     for name in ("ann_ivf_topk", "ann_cosine_topk", "ann_pq_adc"):
         plan = plan_of(spark, name)
         assert "WindowGroupLimit" in plan, f"{name}: rank limit not pushed"

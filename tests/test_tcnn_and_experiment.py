@@ -11,7 +11,7 @@ import pytest
 from limeqo_spark.plans import NODE_VOCABULARY, PlanNode
 from limeqo_spark.run_experiment import load_dataset, run_suite
 from limeqo_spark.strategies import LimeQOStrategy
-from limeqo_spark.tcnn import HAS_TORCH, RidgeCostModel, flatten_tree, hint_onehot
+from limeqo_spark.tcnn import RidgeCostModel, flatten_tree, hint_onehot
 
 
 def _toy_tree() -> PlanNode:
@@ -253,23 +253,6 @@ def test_limeqo_plus_tcnn_pinned_init_is_deterministic(reference_dataset):
     assert finals[0] == finals[1] == finals[2]
 
 
-@pytest.mark.skipif(not HAS_TORCH, reason="torch not in container")
-def test_torch_tcnn_forward():  # pragma: no cover
-    import torch
-
-    from limeqo_spark.tcnn import TorchTCNN
-
-    feats, children = flatten_tree(_toy_tree())
-    m = TorchTCNN(feats.shape[1], 4, 16)
-    out = m(
-        torch.tensor(feats[None]),
-        torch.tensor(children[None]),
-        torch.tensor([0]),
-        torch.tensor([1]),
-    )
-    assert out.shape == (1,)
-
-
 def test_run_experiment_suite(tmp_path, reference_dataset):
     wl = load_dataset("job")
     finals = run_suite(
@@ -369,3 +352,25 @@ def test_stack_dataset_mask_facts_and_missing_matrix(reference_dataset):
     assert m.shape == (6191, 49)
     assert (m[:, 0] == 1).all()
     assert 0.09 < m.mean() < 0.13
+
+
+def test_load_dataset_names_the_absent_directory(tmp_path, monkeypatch):
+    """Without the reference directory every dataset fails with the same
+    reason the ``reference_dataset`` fixture skips with; with the directory
+    present but a matrix missing, the message names that matrix, and only
+    ``stack`` claims the missing-blob reason."""
+    from limeqo_spark import run_experiment
+
+    absent = tmp_path / "dataset"
+    monkeypatch.setattr(run_experiment, "REFERENCE_DATASET_DIR", str(absent))
+    with pytest.raises(FileNotFoundError) as err:
+        load_dataset("job")
+    assert str(err.value) == f"reference dataset absent: no directory {absent}"
+
+    absent.mkdir()
+    with pytest.raises(FileNotFoundError) as err:
+        load_dataset("job")
+    assert "job-matrix.csv" in str(err.value)
+    assert "stack" not in str(err.value)
+    with pytest.raises(FileNotFoundError, match="missing large blob"):
+        load_dataset("stack")
