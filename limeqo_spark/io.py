@@ -74,7 +74,7 @@ def _session_stopped(spark: SparkSession) -> bool:
     (``SparkContext.stop()`` nulls the JVM handle)."""
     try:
         return spark.sparkContext._jsc is None
-    except Exception:  # noqa: BLE001 — any breakage reads as dead
+    except AttributeError:  # a session object without a context reads as dead
         return True
 
 
@@ -112,11 +112,12 @@ def epoch_us(col) -> F.Column:
 #: session strongly referenced forever so a dead session's id() could
 #: never be reused — correct but an unbounded session leak in a long-lived
 #: multi-session process. A cached DataFrame itself pins its session, so
-#: weak references cannot break that cycle; instead every ``table()`` call
-#: sweeps out entries whose session has been STOPPED (the normal end of a
-#: session's life), after which the session object — no longer reachable
-#: through the cache — is collectable, and its id() cannot be handed to a
-#: new session until then.
+#: weak references cannot break that cycle; instead the ``table()`` call
+#: that first brings a new session id into the cache sweeps out entries
+#: whose session has been STOPPED (the normal end of a session's life),
+#: after which the session object — no longer reachable through the cache —
+#: is collectable, and its id() cannot be handed to a new session until
+#: then.
 _TABLE_PLAN_CACHE: dict[int, dict[tuple, DataFrame]] = {}
 
 

@@ -3,8 +3,10 @@
 This is the end-to-end slice (SURVEY §7): a set of queries x the HintSet
 registry, explored with censored-ALS completion, where "executing a cell"
 launches the hinted query on the cluster with a wall-clock budget
-(steer.run_steered) instead of a matrix lookup. Plan-equivalence dedup means
-a measured latency is shared by every HintSet with the same physical plan.
+(steer.run_steered) instead of a matrix lookup. Each query is built and
+planned once per session (steer.hint_plans); a cell's run executes that
+frame, and its measured latency is shared by every HintSet with the same
+physical plan.
 
 State lives in a long-form observations table (Parquet-persistable via
 ``to_long_df``); the tiny Q x H mirror drives the solver on the driver.
@@ -23,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from limeqo_spark import hints as H
 from limeqo_spark.complete import complete_log_space
 from limeqo_spark.plans import NODE_VOCABULARY, featurize, parse_formatted_tree, plan_hash
-from limeqo_spark.steer import hint_plan_texts, run_steered
-from limeqo_spark.strategies import ALPHA, BETA, rank_cells_by_improvement
+from limeqo_spark.steer import hint_plans, run_steered
+from limeqo_spark.strategies import rank_cells_by_improvement, timeout_tolerance
 from limeqo_spark.tcnn import RidgeCostModel, hint_onehot
 
 
@@ -62,6 +64,7 @@ class LiveSteeringSession:
         self.cutoffs = np.zeros((q, h))
         self.explored = np.zeros((q, h))
         self.observations: list[LiveObservation] = []
+        self._frames: dict[int, dict[str | None, DataFrame]] = {}
         self._plan_hashes: dict[tuple[int, int], str] = {}
         self._plan_texts: dict[tuple[int, int], str] = {}
         self._feature_cache: dict[tuple[int, int], np.ndarray] = {}
@@ -79,14 +82,21 @@ class LiveSteeringSession:
 
     def _fingerprints(self, qi: int) -> dict[int, str]:
         """Plan hash per hint for one query (planning only, one build per
-        join hint: steer.hint_plan_texts). Each cell's EXPLAIN text is kept
-        for the featurizers, so a cell is planned once per session."""
-        if (qi, 0) not in self._plan_hashes:
+        join hint: steer.hint_plans). The built frames are kept for the
+        cell runs and each cell's EXPLAIN text for the featurizers, so a
+        cell is built and planned once per session."""
+        if qi not in self._frames:
             build = self.queries[self.query_ids[qi]]
-            for hj, text in enumerate(hint_plan_texts(self.spark, build, self.hint_sets)):
+            self._frames[qi], texts = hint_plans(self.spark, build, self.hint_sets)
+            for hj, text in enumerate(texts):
                 self._plan_texts[(qi, hj)] = text
                 self._plan_hashes[(qi, hj)] = plan_hash(text)
         return {hj: self._plan_hashes[(qi, hj)] for hj in range(len(self.hint_sets))}
+
+    def frame(self, qi: int, hj: int) -> DataFrame:
+        """The frame the fingerprint pass built for this cell's join hint."""
+        self._fingerprints(qi)
+        return self._frames[qi][self.hint_sets[hj].join_hint]
 
     def _features(self, qi: int, hj: int) -> np.ndarray:
         """LimeQO+ live featurization (A22/A27 on real Spark plans): parse
@@ -119,10 +129,10 @@ class LiveSteeringSession:
     def execute_cell(self, qi: int, hj: int, timeout_s: float | None) -> None:
         """Run one (query, hint) cell live; fan the result out to every
         plan-equivalent hint of that query (A15/A18: pay each plan once)."""
-        build = self.queries[self.query_ids[qi]]
+        df = self.frame(qi, hj)
         runs = []
         for _ in range(max(1, self.repeats)):
-            runs.append(run_steered(self.spark, build, self.hint_sets[hj], timeout_s))
+            runs.append(run_steered(self.spark, df, self.hint_sets[hj], timeout_s))
             if runs[-1].latency is None:  # censored: don't pay the budget again
                 break
         run = runs[-1]
@@ -135,12 +145,13 @@ class LiveSteeringSession:
         completed = [r.latency for r in runs if r.latency is not None]
         latency = float(np.median(completed)) if completed else None
         cutoff = None if completed else run.censor_cutoff
-        self._record(qi, hj, latency, cutoff, run.plan_hash, True)
+        fp = self._plan_hashes[(qi, hj)]
+        self._record(qi, hj, latency, cutoff, fp, True)
         # inherited cells must carry the SAME median-of-N value as the
         # measured cell, not the last run's latency — otherwise a plan
         # equivalence class holds internally inconsistent observations
-        for other_hj, fp in self._fingerprints(qi).items():
-            if other_hj != hj and fp == run.plan_hash and self.explored[qi, other_hj] == 0:
+        for other_hj, other_fp in self._fingerprints(qi).items():
+            if other_hj != hj and other_fp == fp and self.explored[qi, other_hj] == 0:
                 self._record(qi, other_hj, latency, cutoff, fp, False)
 
     def add_queries(self, queries: dict[str, Callable[[], DataFrame]]) -> None:
@@ -171,13 +182,20 @@ class LiveSteeringSession:
             if self.explored[qi, 0] == 0:
                 if self.warmup:
                     # unmeasured priming run (same budget kill protection)
-                    run_steered(
-                        self.spark,
-                        self.queries[self.query_ids[qi]],
-                        self.hint_sets[0],
-                        timeout_s,
-                    )
+                    run_steered(self.spark, self.frame(qi, 0), self.hint_sets[0], timeout_s)
                 self.execute_cell(qi, 0, timeout_s)
+
+    def probe(self, timeout_s: float | None = None) -> list[LiveObservation]:
+        """Measure every unexplored cell, in hint order, each distinct plan
+        once: a measured cell's plan-equivalent hints inherit its value
+        before their turn comes (A15/A18). Returns the observation log,
+        which :meth:`save` persists for ``Workload.from_long_df``. Call
+        :meth:`bootstrap` first for a warmed-up default column."""
+        for qi in range(len(self.query_ids)):
+            for hj in range(len(self.hint_sets)):
+                if self.explored[qi, hj] == 0:
+                    self.execute_cell(qi, hj, timeout_s)
+        return self.observations
 
     def _predict_plan_model(self) -> np.ndarray:
         """LimeQO+ live prediction: fit the plan-feature cost model (ridge
@@ -278,8 +296,8 @@ class LiveSteeringSession:
         censored-ALS matrix completion (LimeQO), ``model="plan"`` via the
         ridge plan-feature cost model, ``model="tcnn"`` via the executable
         numpy tree-CNN over real EXPLAIN trees (LimeQO+ live) — pick the
-        top-k improvement cells, execute them with timeout tolerance
-        min(ALPHA * best, BETA * predicted)."""
+        top-k improvement cells, execute them with the timeout tolerance
+        of :func:`~limeqo_spark.strategies.timeout_tolerance`."""
         rng = np.random.default_rng(self.seed)
         for _ in range(rounds):
             if self.explored.all():
@@ -305,10 +323,7 @@ class LiveSteeringSession:
                 take = untried[rng.permutation(len(untried))[:k]]
                 cells = [(int(i), int(j)) for i, j in take]
             for qi, hj in cells:
-                base = mo[qi] if math.isfinite(mo[qi]) else None
-                tol = None
-                if base is not None:
-                    tol = float(min(ALPHA * base, max(BETA * completed[qi, hj], 0.05 * base)))
+                tol = timeout_tolerance(mo[qi], completed[qi, hj]) if math.isfinite(mo[qi]) else None
                 self.execute_cell(qi, hj, tol)
 
     def best_hints(self) -> dict[str, tuple[int, float]]:

@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
-from limeqo_spark.plans import explain_formatted, plan_hash, replanned
+from limeqo_spark.plans import explain_formatted, replanned
 
 
 @dataclass
@@ -26,28 +26,22 @@ class SteeredRun:
     hint_id: int
     latency: float | None  # None => censored (timed out)
     censor_cutoff: float | None
-    plan_hash: str
-    plan_text: str
 
 
 def run_steered(
     spark: SparkSession,
-    build: Callable[[], DataFrame],
+    df: DataFrame,
     hint_set: H.HintSet,
     timeout_s: float | None = None,
 ) -> SteeredRun:
-    """Build + execute ``build()`` under ``hint_set``; return latency (or the
-    censoring cutoff on timeout) and the plan fingerprint.
+    """Execute ``df`` to the noop sink under ``hint_set``'s confs; return
+    its latency, or the censoring cutoff on timeout.
 
-    The plan is fingerprinted *before* execution (initial physical plan) so
-    equivalence grouping is stable under AQE re-planning (SURVEY §7 risk:
-    plan stability).
+    ``df`` is the frame :func:`hint_plans` built for the set's join hint;
+    the write plans it afresh under the applied confs, so it runs the plan
+    that pass fingerprinted.
     """
     with H.applied(spark, hint_set):
-        df = build()  # io.table tags relations with the active join hint
-        text = explain_formatted(df)
-        fp = plan_hash(text)
-
         group = f"limeqo-steer-{uuid.uuid4().hex[:12]}"
         sc = spark.sparkContext
         done = threading.Event()
@@ -71,26 +65,28 @@ def run_steered(
         if not finished:
             sc.cancelJobGroup(group)
             done.wait(timeout=30)
-            return SteeredRun(hint_set.hint_id, None, float(timeout_s), fp, text)
+            return SteeredRun(hint_set.hint_id, None, float(timeout_s))
         if err:
             raise err[0]
-        return SteeredRun(hint_set.hint_id, elapsed, None, fp, text)
+        return SteeredRun(hint_set.hint_id, elapsed, None)
 
 
-def hint_plan_texts(
+def hint_plans(
     spark: SparkSession,
     build: Callable[[], DataFrame],
     hint_sets: list[H.HintSet],
-) -> list[str]:
-    """EXPLAIN FORMATTED text of ``build()`` under each hint set, building
-    the query once per distinct join hint.
+) -> tuple[dict[str | None, DataFrame], list[str]]:
+    """``build()``'s frame per distinct join hint of ``hint_sets``, and its
+    EXPLAIN FORMATTED text under each hint set.
 
     Only a set's join hint changes the built plan (io.table tags relations
     with it); its other levers are session confs, which Catalyst reads only
-    when it optimizes and plans. So each set re-plans the plan built for its
-    join hint under its own confs, which gives the same plan as rebuilding
-    the query under the set, for builders that do not read those confs
-    themselves.
+    when it optimizes and plans. So each set re-plans the frame built for
+    its join hint under its own confs, which gives the same plan as
+    rebuilding the query under the set, for builders that do not read those
+    confs themselves. The plan is fingerprinted before execution (initial
+    physical plan), so equivalence grouping is stable under AQE re-planning
+    (SURVEY §7 risk: plan stability).
     """
     built: dict[str | None, DataFrame] = {}
     texts = []
@@ -99,32 +95,4 @@ def hint_plan_texts(
             if hs.join_hint not in built:
                 built[hs.join_hint] = build()
             texts.append(explain_formatted(replanned(built[hs.join_hint])))
-    return texts
-
-
-def probe_hint_space(
-    spark: SparkSession,
-    build: Callable[[], DataFrame],
-    hint_sets: list[H.HintSet] | None = None,
-    timeout_s: float | None = None,
-    dedup_by_plan: bool = True,
-) -> list[SteeredRun]:
-    """Measure a query across a HintSet registry, paying each distinct
-    physical plan only once (A15/A18): equivalent plans inherit the measured
-    latency instead of re-running."""
-    hint_sets = hint_sets if hint_sets is not None else H.REGISTRY
-    if dedup_by_plan:
-        fps = [plan_hash(t) for t in hint_plan_texts(spark, build, hint_sets)]
-    else:
-        fps = [None] * len(hint_sets)
-    runs: list[SteeredRun] = []
-    seen: dict[str, SteeredRun] = {}
-    for hs, fp in zip(hint_sets, fps):
-        if fp in seen:
-            prior = seen[fp]
-            runs.append(SteeredRun(hs.hint_id, prior.latency, prior.censor_cutoff, fp, ""))
-            continue
-        run = run_steered(spark, build, hs, timeout_s)
-        seen[run.plan_hash] = run
-        runs.append(run)
-    return runs
+    return built, texts

@@ -152,6 +152,16 @@ def rank_cells_by_improvement(
     return out
 
 
+def timeout_tolerance(best: float, pred: float, alpha: float = ALPHA, beta: float = BETA) -> float:
+    """A30 timeout of a cell: ``alpha`` x its query's best observed latency,
+    capped at ``beta`` x the cell's predicted latency. The cap is floored
+    at 5% of the best: a near-zero prediction would otherwise censor the
+    cell at a ~0 cutoff, permanently blocking a potentially-good hint
+    (observed on degenerate matrices where the nonneg solver zeroes a
+    factor)."""
+    return float(min(alpha * best, max(beta * pred, 0.05 * best)))
+
+
 class Strategy:
     name = "base"
 
@@ -368,12 +378,7 @@ class LimeQOStrategy(Strategy):
         mo = self.state.min_observed()[i]
         base = mo if np.isfinite(mo) else float(self.wl.matrix[:, 0].max())
         if self.pred is not None:
-            # floor the beta term at 5% of the current best: a near-zero
-            # prediction would otherwise censor the cell at a ~0 cutoff,
-            # permanently blocking a potentially-good hint (observed on
-            # degenerate matrices where the nonneg solver zeroes a factor)
-            cap = max(self.beta * self.pred[i, j], 0.05 * base)
-            return float(min(self.alpha * base, cap))
+            return timeout_tolerance(base, self.pred[i, j], self.alpha, self.beta)
         return self.alpha * base
 
     def select(self) -> list[tuple[int, int]]:

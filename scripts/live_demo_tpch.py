@@ -74,11 +74,10 @@ def main() -> None:
         hj, steered_s = best[qid]
         if hj == 0 or defaults[qid] / steered_s <= 1.05:
             continue
-        build = queries[qid]
         d_runs, s_runs = [], []
         for _ in range(5):
-            d_runs.append(run_steered(spark, build, sess.hint_sets[0], None).latency)
-            s_runs.append(run_steered(spark, build, sess.hint_sets[hj], None).latency)
+            d_runs.append(run_steered(spark, sess.frame(qi, 0), sess.hint_sets[0], None).latency)
+            s_runs.append(run_steered(spark, sess.frame(qi, hj), sess.hint_sets[hj], None).latency)
         confirm[qid] = {
             "hint": sess.hint_sets[hj].name,
             "default_runs_s": [round(x, 4) for x in d_runs],

@@ -9,7 +9,8 @@ Unlike bench.py this is a diagnostic tool: it labels jobs per query
 right layer (driver-side plan building vs job count vs stage time).
 
 Usage: python scripts/opt_measure.py [query ...]   (default: bench HEADLINE)
-Env: OPT_SUFFIX=before|after (plan dump suffix), OPT_REPS=N (default 3)
+Env: OPT_SUFFIX=before|after (plan dump suffix), OPT_REPS=N (default 3),
+SPARK_GRAFT_ROUND=tag (plan dump directory; default bench.ROUND_TAG)
 """
 
 from __future__ import annotations
@@ -25,12 +26,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 SUFFIX = os.environ.get("OPT_SUFFIX", "before")
 REPS = int(os.environ.get("OPT_REPS", "3"))
-TAG = os.environ.get("SPARK_GRAFT_ROUND", "r11")
 
 
 def main() -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, ROUND_TAG
     from limeqo_spark.manifest import REGISTRY
+    from limeqo_spark.plans import explain_formatted
     from limeqo_spark.session import get_spark
 
     names = sys.argv[1:] or HEADLINE
@@ -39,7 +40,7 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
 
     plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", TAG
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", ROUND_TAG
     )
     os.makedirs(plans_dir, exist_ok=True)
 
@@ -68,9 +69,7 @@ def main() -> None:
             if rep == 0:
                 try:
                     with open(os.path.join(plans_dir, f"{name}_{SUFFIX}.txt"), "w") as f:
-                        f.write(df._jdf.queryExecution().explainString(
-                            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                        ))
+                        f.write(explain_formatted(df))
                 except Exception as exc:  # noqa: BLE001
                     print(f"!! explain failed for {name}: {exc}", file=sys.stderr)
             spark.catalog.clearCache()

@@ -168,8 +168,8 @@ def test_repeats_median_inherited_consistently(spark, monkeypatch):
 
     seq = iter([1.0, 3.0])  # two runs of the measured cell: median 2.0
 
-    def fake_run(spark_, build, hint_set, timeout_s=None):
-        return SteeredRun(hint_set.hint_id, next(seq), None, "FAKEPLAN", "")
+    def fake_run(spark_, df, hint_set, timeout_s=None):
+        return SteeredRun(hint_set.hint_id, next(seq), None)
 
     monkeypatch.setattr(live_mod, "run_steered", fake_run)
 
@@ -177,9 +177,9 @@ def test_repeats_median_inherited_consistently(spark, monkeypatch):
         return spark.range(1)
 
     s = LiveSteeringSession(spark, {"q": q}, warmup=False, repeats=2)
-    # every hint fingerprints to the same plan for this trivial query, so
-    # the fan-out covers the whole row; pin the hash to the fake run's
-    monkeypatch.setattr(live_mod, "plan_hash", lambda df: "FAKEPLAN")
+    # pin every hint's fingerprint to one plan, so the fan-out covers the
+    # whole row
+    monkeypatch.setattr(live_mod, "plan_hash", lambda text: "FAKEPLAN")
     s.execute_cell(0, 0, None)
 
     assert s.matrix[0, 0] == 2.0  # median of [1.0, 3.0], not 3.0
@@ -252,11 +252,12 @@ def test_mixed_timeout_repeats_keep_the_completed_observation(spark, monkeypatch
     'latency >= cutoff' that the censored-ALS repair pass would then
     propagate."""
     import limeqo_spark.live as live_mod
+    from limeqo_spark.steer import SteeredRun
 
     results = iter(
         [
-            type("R", (), {"latency": 9.0, "censor_cutoff": None, "plan_hash": "fp1"})(),
-            type("R", (), {"latency": None, "censor_cutoff": 10.0, "plan_hash": "fp1"})(),
+            SteeredRun(0, 9.0, None),
+            SteeredRun(0, None, 10.0),
         ]
     )
     monkeypatch.setattr(
@@ -298,9 +299,10 @@ def test_fingerprint_replan_matches_rebuild(spark):
 
 
 def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
-    """One build per (query, distinct join hint) in the fingerprint pass;
-    afterwards the plan featurizers read the cached EXPLAIN text and
-    neither build nor EXPLAIN again."""
+    """One build per (query, distinct join hint) and one EXPLAIN per cell,
+    all in the fingerprint pass: bootstrap and an explore round execute
+    the frames it built, and the plan featurizers read the cached EXPLAIN
+    text, so none of them builds or EXPLAINs again."""
     import limeqo_spark.live as live_mod
     from limeqo_spark import plans, steer
     from limeqo_spark.workloads import steering_workload
@@ -315,12 +317,9 @@ def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
 
         return build
 
-    s = LiveSteeringSession(spark, {qid: counted(qid) for qid in builds})
+    s = LiveSteeringSession(spark, {qid: counted(qid) for qid in builds}, iters=5)
     join_hints = {hs.join_hint for hs in s.hint_sets}
     assert len(join_hints) == 5
-    for qi in range(len(s.query_ids)):
-        s._fingerprints(qi)
-    assert builds == {qid: len(join_hints) for qid in builds}
 
     explains = [0]
     orig = plans.explain_formatted
@@ -332,12 +331,15 @@ def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
     for mod in (plans, steer, live_mod):
         if hasattr(mod, "explain_formatted"):
             monkeypatch.setattr(mod, "explain_formatted", counted_explain)
-    for qid in builds:
-        builds[qid] = 0
+    s.bootstrap(timeout_s=120.0)
+    s.explore(rounds=1, k=2)
+    assert sum(o.measured for o in s.observations) > len(builds)  # explore ran cells
+    assert builds == {qid: len(join_hints) for qid in builds}
+    assert explains[0] == len(s.hint_sets) * len(builds)
     for qi in range(len(s.query_ids)):
         for hj in range(len(s.hint_sets)):
             assert np.isfinite(s._features(qi, hj)).all()
             feats, children = s._flat_tree(qi, hj)
             assert len(feats) == len(children)
-    assert builds == {qid: 0 for qid in builds}
-    assert explains[0] == 0
+    assert builds == {qid: len(join_hints) for qid in builds}
+    assert explains[0] == len(s.hint_sets) * len(builds)

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from limeqo_spark import hints as H
 from limeqo_spark import plans as P
 from limeqo_spark.io import table
-from limeqo_spark.steer import probe_hint_space, run_steered
+from limeqo_spark.live import LiveSteeringSession
+from limeqo_spark.steer import run_steered
 
 SF = "/root/testdata/sf0.001"
 
@@ -41,20 +42,28 @@ def test_registry_shape():
 def test_hint_invariance_and_plan_dedup(spark):
     build = join_query(spark)
     baseline = {tuple(r) for r in build().collect()}
-    runs = probe_hint_space(spark, build, H.REGISTRY[:6], timeout_s=120.0)
-    assert len(runs) == 6
-    hashes = {r.plan_hash for r in runs}
-    assert len(hashes) < len(runs), "expected some HintSets to share a physical plan"
+    s = LiveSteeringSession(spark, {"q": build}, hint_sets=H.REGISTRY[:6])
+    obs = s.probe(timeout_s=120.0)
+    assert len(obs) == 6
+    hashes = {o.plan_hash for o in obs}
+    assert len(hashes) < len(obs), "expected some HintSets to share a physical plan"
     # hint-invariance: every hinted variant returns identical results
     for hs in H.REGISTRY[:6]:
         with H.applied(spark, hs):
             got = {tuple(r) for r in build().collect()}
         assert got == baseline, f"HintSet {hs.hint_id} changed query results"
+    # ... and so does the frame each measured cell executed, under its set
+    for o in obs:
+        if o.measured:
+            with H.applied(spark, s.hint_sets[o.hint_id]):
+                got = {tuple(r) for r in s.frame(0, o.hint_id).collect()}
+            assert got == baseline, f"cell frame of hint {o.hint_id} changed query results"
 
 
-def test_probe_builds_once_per_join_hint_plus_runs(spark):
-    """The dedup pass of probe_hint_space builds the query once per distinct
-    join hint; every other build is a measured run's own."""
+def test_probe_builds_once_per_join_hint(spark):
+    """A probe builds the query once per distinct join hint, in the
+    fingerprint pass; its measured runs execute those frames and build
+    nothing."""
     inner = join_query(spark)
     builds = [0]
 
@@ -63,9 +72,11 @@ def test_probe_builds_once_per_join_hint_plus_runs(spark):
         return inner()
 
     hint_sets = H.REGISTRY[:6] + H.REGISTRY[16:18]
-    runs = probe_hint_space(spark, build, hint_sets, timeout_s=120.0)
-    measured = sum(1 for r in runs if r.plan_text)
-    assert builds[0] == len({hs.join_hint for hs in hint_sets}) + measured
+    s = LiveSteeringSession(spark, {"q": build}, hint_sets=hint_sets)
+    obs = s.probe(timeout_s=120.0)
+    assert len(obs) == len(hint_sets) and s.explored.all()
+    assert sum(o.measured for o in obs) > 1
+    assert builds[0] == len({hs.join_hint for hs in hint_sets})
 
 
 def test_forbid_broadcast_changes_plan(spark):
@@ -102,7 +113,7 @@ def test_run_steered_timeout_censors(spark):
             "count(*) as n"
         )
 
-    run = run_steered(spark, slow, H.REGISTRY[0], timeout_s=0.05)
+    run = run_steered(spark, slow(), H.REGISTRY[0], timeout_s=0.05)
     assert run.latency is None
     assert run.censor_cutoff == pytest.approx(0.05)
 
