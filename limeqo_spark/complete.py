@@ -9,16 +9,16 @@ column), the ridge system over that row's *observed* entries only,
     (B_obs' B_obs + lam I) a_i = B_obs' m_i,obs
 
 with factors clamped non-negative (runtimes are non-negative). Censored
-cells — "runtime exceeds cutoff c, value unknown" — enter as always-on
-pseudo-observations with target ``max(est, cutoff)``: below the cutoff the
-cell is pulled up to c; at-or-above it the target equals the current
-estimate, a self-consistent fixed point that exerts no pull. This mirrors
-the reference's unconditional per-half-iteration clamp
-(matrix_factorization.py:57-59,65-67 — impute with the model estimate,
-raise violating targets to the cutoff) re-expressed over observed cells.
-An earlier active-set variant (pin only while est < cutoff) let adversarial
-low-rank structure settle well below the cutoffs after the constraint
-deactivated — Hypothesis seed 5381 reached 0.39x cutoff on 6/19 cells.
+cells — "runtime exceeds cutoff c, value unknown" — form an active set:
+before each half-step, a censored cell whose current estimate is below c
+joins the solve as an observation with target c; one at or above c stays
+out and exerts no pull. This is a lighter touch than the reference's
+unconditional per-half-iteration clamp (matrix_factorization.py:57-59,65-67
+— impute with the model estimate, raise violating targets to the cutoff)
+and explored better on the CEB/JOB grids. Once a cell leaves the active
+set, adversarial low-rank structure can settle its estimate well below the
+cutoff (Hypothesis seed 5381 reached 0.39x cutoff), so a final repair pass
+floors every censored cell of the returned matrix at its cutoff.
 
 The matrix is tiny (<= ~6200 x 49 ~= 2.4 MB), so the exact solver runs on
 the driver; :func:`mllib_als_complete` is the distributed fast path for

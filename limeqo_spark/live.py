@@ -1,20 +1,20 @@
 """Live steering session: LimeQO over REAL hinted Spark executions.
 
 This is the end-to-end slice (SURVEY §7): a set of queries x the HintSet
-registry, explored with censored-ALS completion, where "executing a cell"
-launches the hinted query on the cluster with a wall-clock budget
+registry, explored by the simulator's loop (``strategies.Strategy.run``)
+with the session as its cell executor, where "executing a cell" launches
+the hinted query on the cluster with a wall-clock budget
 (steer.run_steered) instead of a matrix lookup. Each query is built and
 planned once per session (steer.hint_plans); a cell's run executes that
 frame, and its measured latency is shared by every HintSet with the same
 physical plan.
 
 State lives in a long-form observations table (Parquet-persistable via
-``to_long_df``); the tiny Q x H mirror drives the solver on the driver.
+``to_long_df``); the tiny Q x H mirror drives the models on the driver.
 """
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -23,11 +23,10 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
-from limeqo_spark.complete import complete_log_space
-from limeqo_spark.plans import NODE_VOCABULARY, featurize, parse_formatted_tree, plan_hash
+from limeqo_spark.plans import NODE_VOCABULARY, parse_formatted_tree, plan_hash
 from limeqo_spark.steer import hint_plans, run_steered
-from limeqo_spark.strategies import rank_cells_by_improvement, timeout_tolerance
-from limeqo_spark.tcnn import RidgeCostModel, hint_onehot
+from limeqo_spark.strategies import CellExecutor, LimeQOStrategy
+from limeqo_spark.tcnn import collate_trees, flatten_tree
 
 
 @dataclass
@@ -41,7 +40,7 @@ class LiveObservation:
 
 
 @dataclass
-class LiveSteeringSession:
+class LiveSteeringSession(CellExecutor):
     spark: SparkSession
     queries: dict[str, Callable[[], DataFrame]]
     hint_sets: list[H.HintSet] = field(default_factory=lambda: list(H.REGISTRY))
@@ -64,27 +63,23 @@ class LiveSteeringSession:
         self.cutoffs = np.zeros((q, h))
         self.explored = np.zeros((q, h))
         self.observations: list[LiveObservation] = []
+        #: exploration time charged by reveal_or_censor (bootstrap is free)
+        self.spent = 0.0
+        self.cells_explored = 0
         self._frames: dict[int, dict[str | None, DataFrame]] = {}
         self._plan_hashes: dict[tuple[int, int], str] = {}
         self._plan_texts: dict[tuple[int, int], str] = {}
-        self._feature_cache: dict[tuple[int, int], np.ndarray] = {}
-        self._tree_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-        self._tcnn = None
 
     # --- state helpers ---
     @property
     def mask(self) -> np.ndarray:
         return (~np.isnan(self.matrix)).astype(np.float64)
 
-    def min_observed(self) -> np.ndarray:
-        masked = np.where(np.isnan(self.matrix), np.inf, self.matrix)
-        return masked.min(axis=1)
-
     def _fingerprints(self, qi: int) -> dict[int, str]:
         """Plan hash per hint for one query (planning only, one build per
         join hint: steer.hint_plans). The built frames are kept for the
-        cell runs and each cell's EXPLAIN text for the featurizers, so a
-        cell is built and planned once per session."""
+        cell runs and each cell's EXPLAIN text for :meth:`trees`, so a cell
+        is built and planned once per session."""
         if qi not in self._frames:
             build = self.queries[self.query_ids[qi]]
             self._frames[qi], texts = hint_plans(self.spark, build, self.hint_sets)
@@ -97,24 +92,6 @@ class LiveSteeringSession:
         """The frame the fingerprint pass built for this cell's join hint."""
         self._fingerprints(qi)
         return self._frames[qi][self.hint_sets[hj].join_hint]
-
-    def _features(self, qi: int, hj: int) -> np.ndarray:
-        """LimeQO+ live featurization (A22/A27 on real Spark plans): parse
-        the EXPLAIN FORMATTED tree of THIS query under THIS HintSet into the
-        node-histogram feature vector, concatenated with the hint one-hot."""
-        key = (qi, hj)
-        if key not in self._feature_cache:
-            self._fingerprints(qi)
-            tree = parse_formatted_tree(self._plan_texts[key])
-            plan_vec = (
-                featurize(tree)
-                if tree is not None
-                else np.zeros(len(NODE_VOCABULARY) + 2)
-            )
-            self._feature_cache[key] = np.concatenate(
-                [plan_vec, hint_onehot(hj, len(self.hint_sets))]
-            )
-        return self._feature_cache[key]
 
     def _record(self, qi: int, hj: int, latency: float | None, cutoff: float | None, fp: str, measured: bool) -> None:
         self.explored[qi, hj] = 1
@@ -159,10 +136,11 @@ class LiveSteeringSession:
         experiment (new queries arrive after exploration started;
         reference `experiment/stack-datashift/`). New rows join with
         nothing observed; the next :meth:`bootstrap` measures their default
-        plans and :meth:`explore` folds them into the model, which
-        extrapolates their unobserved cells from the hint factors it
-        already learned. Existing observations, plan caches, and explored
-        flags are untouched (old row indices are stable)."""
+        plans, and the next :meth:`explore` fits its model over the grown
+        matrix, extrapolating their unobserved cells from the hint factors
+        the other rows' observations determine. Existing observations, plan
+        caches, and explored flags are untouched (old row indices are
+        stable)."""
         new = {k: v for k, v in queries.items() if k not in self.queries}
         if not new:
             return
@@ -197,134 +175,54 @@ class LiveSteeringSession:
                     self.execute_cell(qi, hj, timeout_s)
         return self.observations
 
-    def _predict_plan_model(self) -> np.ndarray:
-        """LimeQO+ live prediction: fit the plan-feature cost model (ridge
-        fallback of the TCNN, A21/A25-A27) on every explored cell — observed
-        latency or censoring cutoff — and predict the full Q x H matrix from
-        the real EXPLAIN features. Observed cells keep their true value."""
-        xs, ys, cuts = [], [], []
-        for qi, hj in np.argwhere(self.explored > 0):
-            lat, cut = self.matrix[qi, hj], self.cutoffs[qi, hj]
-            if np.isnan(lat) and cut <= 0:
-                continue
-            xs.append(self._features(int(qi), int(hj)))
-            ys.append(0.0 if np.isnan(lat) else lat)
-            cuts.append(cut)
-        if not xs:
-            raise RuntimeError(
-                "plan-model exploration needs at least one observation; "
-                "call bootstrap() before explore(model='plan')"
-            )
-        model = RidgeCostModel().fit(np.asarray(xs), np.asarray(ys), np.asarray(cuts))
-        q, h = self.explored.shape
-        all_feats = np.stack([self._features(qi, hj) for qi in range(q) for hj in range(h)])
-        pred = model.predict(all_feats).reshape(q, h)
-        return np.where(np.isnan(self.matrix), pred, self.matrix)
+    def trees(self) -> tuple[tuple[np.ndarray, np.ndarray], np.ndarray]:
+        """The cells' real EXPLAIN trees for the plan-based models (A22/A23
+        on Spark plans): one flattened tree per distinct plan hash, stacked,
+        and each cell's tree index. The fingerprint pass's cached EXPLAIN
+        text is parsed, so nothing is planned again."""
+        ids: dict[str, int] = {}
+        flats = []
+        tree_id = np.zeros(self.explored.shape, dtype=np.int64)
+        d = len(NODE_VOCABULARY)
+        for qi in range(len(self.query_ids)):
+            for hj, fp in self._fingerprints(qi).items():
+                if fp not in ids:
+                    ids[fp] = len(flats)
+                    tree = parse_formatted_tree(self._plan_texts[(qi, hj)])
+                    flats.append(
+                        flatten_tree(tree)
+                        if tree is not None
+                        else (np.zeros((2, d)), np.zeros((2, 2), dtype=np.int64))
+                    )
+                tree_id[qi, hj] = ids[fp]
+        return collate_trees(flats), tree_id
 
-    def _flat_tree(self, qi: int, hj: int):
-        """Flattened (features, child-index) EXPLAIN tree for one cell —
-        the real-plan input of the live TCNN (A22/A23 on Spark plans)."""
-        key = (qi, hj)
-        if key not in self._tree_cache:
-            from limeqo_spark.tcnn import flatten_tree
+    def reveal_or_censor(self, i: int, j: int, tolerance: float) -> bool:
+        """The exploration loop's cell step: run the cell live
+        (:meth:`execute_cell`, timeout ``tolerance``, inf = none) and charge
+        ``spent`` as the simulator does: the latency on a reveal, the cutoff
+        on a timeout."""
+        self.execute_cell(i, j, tolerance if np.isfinite(tolerance) else None)
+        self.cells_explored += 1
+        revealed = not np.isnan(self.matrix[i, j])
+        self.spent += float(self.matrix[i, j] if revealed else self.cutoffs[i, j])
+        return revealed
 
-            self._fingerprints(qi)
-            tree = parse_formatted_tree(self._plan_texts[key])
-            if tree is None:
-                d = len(NODE_VOCABULARY)
-                self._tree_cache[key] = (np.zeros((2, d)), np.zeros((2, 2), dtype=np.int64))
-            else:
-                self._tree_cache[key] = flatten_tree(tree)
-        return self._tree_cache[key]
-
-    def _predict_tcnn_model(self) -> np.ndarray:
-        """LimeQO+ live with the executable tree-CNN (A21/A24-A27): train
-        :class:`~limeqo_spark.tcnn.NumpyTCNN` on the real EXPLAIN trees of
-        every explored cell (censored hinge on timeouts), then predict the
-        full Q x H matrix from each cell's own plan tree + query/hint
-        embeddings. Observed cells keep their true value."""
-        from limeqo_spark.tcnn import NumpyTCNN, collate_trees
-
-        q, h = self.explored.shape
-        n_feat = len(NODE_VOCABULARY)
-        # unique trees over ALL cells (train + predict), deduped by plan hash
-        tree_of: dict[tuple[int, int], int] = {}
-        flats, hash_to_id = [], {}
-        for qi in range(q):
-            for hj in range(h):
-                self._flat_tree(qi, hj)  # also fills the plan-hash cache
-                ph = self._plan_hashes[(qi, hj)]
-                if ph not in hash_to_id:
-                    hash_to_id[ph] = len(flats)
-                    flats.append(self._tree_cache[(qi, hj)])
-                tree_of[(qi, hj)] = hash_to_id[ph]
-        trees = collate_trees(flats)
-        xs, qs, hs_, ys, cuts = [], [], [], [], []
-        for qi, hj in np.argwhere(self.explored > 0):
-            lat, cut = self.matrix[qi, hj], self.cutoffs[qi, hj]
-            if np.isnan(lat) and cut <= 0:
-                continue
-            xs.append(tree_of[(int(qi), int(hj))])
-            qs.append(int(qi))
-            hs_.append(int(hj))
-            ys.append(0.0 if np.isnan(lat) else lat)
-            cuts.append(cut)
-        if not xs:
-            raise RuntimeError(
-                "TCNN exploration needs at least one observation; "
-                "call bootstrap() before explore(model='tcnn')"
-            )
-        if self._tcnn is None:
-            self._tcnn = NumpyTCNN(
-                n_feat, q, h, rank=8, conv1=32, conv2=16, seed=self.seed
-            )
-            epochs = 800
-        else:
-            epochs = 200
-        self._tcnn.fit(
-            trees, np.asarray(xs), np.asarray(qs), np.asarray(hs_),
-            np.asarray(ys), np.asarray(cuts), epochs=epochs, lr=1e-2,
-        )
-        all_tid = np.asarray([tree_of[(qi, hj)] for qi in range(q) for hj in range(h)])
-        allq = np.repeat(np.arange(q), h)
-        allh = np.tile(np.arange(h), q)
-        pred = self._tcnn.predict(trees, all_tid, allq, allh).reshape(q, h)
-        return np.where(np.isnan(self.matrix), pred, self.matrix)
-
-    def explore(self, rounds: int = 3, k: int = 4, model: str = "als") -> None:
-        """LimeQO rounds: predict unobserved cells — ``model="als"`` via
-        censored-ALS matrix completion (LimeQO), ``model="plan"`` via the
-        ridge plan-feature cost model, ``model="tcnn"`` via the executable
-        numpy tree-CNN over real EXPLAIN trees (LimeQO+ live) — pick the
-        top-k improvement cells, execute them with the timeout tolerance
-        of :func:`~limeqo_spark.strategies.timeout_tolerance`."""
-        rng = np.random.default_rng(self.seed)
-        for _ in range(rounds):
-            if self.explored.all():
-                break
-            if model == "tcnn":
-                completed = self._predict_tcnn_model()
-            elif model == "plan":
-                completed = self._predict_plan_model()
-            else:
-                completed = complete_log_space(
-                    np.nan_to_num(self.matrix, nan=0.0),
-                    self.mask,
-                    cutoffs=self.cutoffs,
-                    rank=self.rank,
-                    iters=self.iters,
-                    lam=self.lam,
-                    seed=int(rng.integers(2**31)),
-                ).completed
-            mo = self.min_observed()
-            cells = rank_cells_by_improvement(completed, self.explored, mo, k)
-            if not cells:
-                untried = np.argwhere(self.explored == 0)
-                take = untried[rng.permutation(len(untried))[:k]]
-                cells = [(int(i), int(j)) for i, j in take]
-            for qi, hj in cells:
-                tol = timeout_tolerance(mo[qi], completed[qi, hj]) if math.isfinite(mo[qi]) else None
-                self.execute_cell(qi, hj, tol)
+    def explore(self, rounds: int = 3, k: int = 4, model: str = "als") -> list[dict]:
+        """LimeQO rounds over live executions: the simulator's loop
+        (:meth:`~limeqo_spark.strategies.Strategy.run` of a
+        :class:`~limeqo_spark.strategies.LimeQOStrategy`) with this session
+        as its cell executor. ``model`` predicts the cells: ``"als"``
+        censored-ALS completion, ``"plan"`` the ridge plan-feature cost
+        model, ``"tcnn"`` the numpy tree-CNN over the real EXPLAIN trees
+        (LimeQO+ live). Stops after ``rounds`` rounds or once every cell is
+        explored; returns the per-round metric records."""
+        if not self.mask.any():
+            raise RuntimeError("explore needs an observation: call bootstrap() first")
+        return LimeQOStrategy(
+            None, k=k, seed=self.seed, max_rounds=rounds, slack=None, state=self,
+            model=model, rank=self.rank, iters=self.iters, lam=self.lam,
+        ).run()
 
     def best_hints(self) -> dict[str, tuple[int, float]]:
         """Current recommendation: per query, the best observed (hint, latency)."""

@@ -1,11 +1,13 @@
 """Offline exploration strategies (SURVEY A29-A33): Oracle, Random, Greedy,
 QO-Advisor, LimeQO, LimeQO+.
 
-Simulation mode mirrors the reference's experiment setup: "executing" a
-(query, hint) cell is a lookup into a pre-measured workload matrix, with
-timeout-as-censoring accounting (A30). The driver loop is plain Python; each
-round's bookkeeping is tiny (<=6191x49), while in live mode the same loop's
-execution step launches hinted Spark queries (see steer.py).
+:meth:`Strategy.run` is the one exploration loop. It pays for cells through
+a :class:`CellExecutor`: :class:`SimState` "executes" a (query, hint) cell
+as a lookup into a pre-measured workload matrix, with timeout-as-censoring
+accounting (A30), as the reference's experiments do;
+:class:`~limeqo_spark.live.LiveSteeringSession` runs the hinted Spark query
+instead. The driver loop is plain Python; each round's bookkeeping is tiny
+(<=6191x49).
 
 Metric records match the reference sink schema (SURVEY A52 metrics row):
 training_time, inference_time, exec_time, total_latency, p50/p90/p95/p99,
@@ -27,15 +29,57 @@ ALPHA = 1.0  # timeout tolerance: alpha * best observed latency of the query
 BETA = 15.0  # ... capped by beta * model-predicted latency
 
 
+class CellExecutor:
+    """The cells :meth:`Strategy.run` explores, and what it knows of them:
+    ``mask`` (1 = value revealed), ``matrix`` (revealed values, NaN
+    elsewhere), ``cutoffs`` (>0 = censored at this bound, value unknown),
+    ``explored`` (1 = tried), ``spent`` (exploration time paid) and
+    ``cells_explored``. :meth:`reveal_or_censor` pays for one cell; the
+    models read only these, never a ground-truth matrix."""
+
+    def reveal_or_censor(self, i: int, j: int, tolerance: float) -> bool:
+        """Pay for cell (i, j) with timeout ``tolerance`` (inf: none);
+        True when its value was revealed, False when it timed out."""
+        raise NotImplementedError
+
+    def trees(self) -> tuple[tuple[np.ndarray, np.ndarray], np.ndarray]:
+        """The plan-based models' input: unique plan trees (stacked
+        features, child indices) and each cell's tree index. Without plans
+        every cell shares one dummy tree."""
+        from limeqo_spark.tcnn import dummy_tree
+
+        return dummy_tree(4), np.zeros(self.mask.shape, dtype=np.int64)
+
+    def min_observed(self) -> np.ndarray:
+        return np.where(self.mask > 0, self.matrix, np.inf).min(axis=1)
+
+    def metrics(self, training_time: float, inference_time: float) -> dict:
+        mo = self.min_observed()
+        finite = mo[np.isfinite(mo)]
+        return {
+            "training_time": training_time,
+            "inference_time": inference_time,
+            "exec_time": self.spent,
+            "total_latency": float(mo.sum()),
+            "p50": float(np.percentile(finite, 50)),
+            "p90": float(np.percentile(finite, 90)),
+            "p95": float(np.percentile(finite, 95)),
+            "p99": float(np.percentile(finite, 99)),
+            "explore_queries_cnt": int(self.cells_explored),
+        }
+
+
 @dataclass
-class SimState:
-    """Mutable exploration state over a ground-truth workload matrix."""
+class SimState(CellExecutor):
+    """Exploration state over a ground-truth workload matrix: the cell
+    executor of simulation mode."""
 
     wl: Workload
-    mask: np.ndarray  # 1 = value revealed
-    cutoffs: np.ndarray  # >0 = censored at this threshold (value unknown)
-    explored: np.ndarray  # 1 = cell tried (revealed OR censored OR unhelpful)
-    spent: float = 0.0  # exploration wall-clock paid so far
+    mask: np.ndarray
+    matrix: np.ndarray
+    cutoffs: np.ndarray
+    explored: np.ndarray
+    spent: float = 0.0
     cells_explored: int = 0
     #: per-row values already measured (one entry per distinct physical plan)
     _revealed_values: dict[int, set[float]] = field(default_factory=dict)
@@ -46,6 +90,7 @@ class SimState:
         state = cls(
             wl=wl,
             mask=mask,
+            matrix=np.where(mask > 0, wl.matrix, np.nan),
             cutoffs=np.zeros_like(mask),
             explored=mask.copy(),
             spent=0.0,
@@ -55,10 +100,6 @@ class SimState:
         for i, j in np.argwhere(mask > 0):
             state._revealed_values.setdefault(int(i), set()).add(wl.matrix[i, j])
         return state
-
-    def min_observed(self) -> np.ndarray:
-        masked = np.where(self.mask > 0, self.wl.matrix, np.inf)
-        return masked.min(axis=1)
 
     def reveal_or_censor(self, i: int, j: int, tolerance: float) -> bool:
         """A30: pay min(true latency, tolerance); past tolerance we only learn
@@ -92,22 +133,8 @@ class SimState:
             self.spent += true
             seen.add(true)
         self.mask[i, cls] = 1.0
+        self.matrix[i, cls] = true
         return True
-
-    def metrics(self, training_time: float, inference_time: float) -> dict:
-        mo = self.min_observed()
-        finite = mo[np.isfinite(mo)]
-        return {
-            "training_time": training_time,
-            "inference_time": inference_time,
-            "exec_time": self.spent,
-            "total_latency": float(mo.sum()),
-            "p50": float(np.percentile(finite, 50)),
-            "p90": float(np.percentile(finite, 90)),
-            "p95": float(np.percentile(finite, 95)),
-            "p99": float(np.percentile(finite, 99)),
-            "explore_queries_cnt": int(self.cells_explored),
-        }
 
 
 def rank_cells_by_improvement(
@@ -167,12 +194,13 @@ class Strategy:
 
     def __init__(
         self,
-        wl: Workload,
+        wl: Workload | None,
         k: int = 8,
         seed: int = 0,
         max_rounds: int = 100_000,
         slack: float | None = 20.0,
         time_budget: float | None = None,
+        state: CellExecutor | None = None,
     ) -> None:
         self.wl = wl
         self.k = k
@@ -180,7 +208,9 @@ class Strategy:
         self.max_rounds = max_rounds
         self.slack = slack
         self.time_budget = time_budget
-        self.state = SimState.fresh(wl)
+        #: the cells explored: lookups into ``wl`` unless another executor
+        #: (a live session) is given
+        self.state = state if state is not None else SimState.fresh(wl)
         self._train_t = 0.0
         self._infer_t = 0.0
 
@@ -198,8 +228,9 @@ class Strategy:
         raise NotImplementedError
 
     def tolerance(self, i: int, j: int) -> float:
-        mo = self.state.min_observed()[i]
-        return mo if np.isfinite(mo) else float(self.wl.matrix[:, 0].max() * BETA)
+        """The query's best observed latency; no timeout (inf) for a query
+        with no observation."""
+        return self.state.min_observed()[i]
 
     def stopped(self) -> bool:
         if self.time_budget is not None and self.state.spent >= self.time_budget:
@@ -238,6 +269,9 @@ class Strategy:
         return chosen
 
     def run(self, output_path: str | None = None) -> list[dict]:
+        """The exploration loop, sim and live alike: each round records the
+        executor's metrics, checks the stop rule, fits, selects, and pays
+        for the selected cells through ``state.reveal_or_censor``."""
         records: list[dict] = []
         for _ in range(self.max_rounds):
             records.append(self.state.metrics(self._train_t, self._infer_t))
@@ -344,15 +378,37 @@ class QOAdvisorStrategy(Strategy):
 
 
 class LimeQOStrategy(Strategy):
-    """A31 LimeQO: censored ALS completion in log space; rank untried cells
-    by predicted relative improvement over the current best; timeout guard
-    min(ALPHA * best_observed, BETA * prediction) (SURVEY §3.3)."""
+    """A31 LimeQO: predict every cell, rank untried cells by predicted
+    relative improvement over the current best, timeout guard
+    min(ALPHA * best_observed, BETA * prediction) (SURVEY §3.3).
+
+    The predictor is ``model=``:
+
+    - ``"als"`` (default): censored ALS completion in log space, the
+      average of ``n_restarts`` completions from independent inits;
+    - ``"plan"``: the ridge :class:`~limeqo_spark.tcnn.RidgeCostModel`
+      over each cell's plan-tree node histogram and hint one-hot;
+    - ``"tcnn"``: the :class:`~limeqo_spark.tcnn.NumpyTCNN` over each
+      cell's plan tree plus query/hint embeddings, censored hinge loss,
+      warm-started across rounds (see :meth:`_fit_tcnn`).
+
+    The plan-based models read the executor's :meth:`CellExecutor.trees`:
+    real EXPLAIN trees in a live session, one shared dummy tree in the sim,
+    where the TCNN reduces to a neural matrix factorization."""
 
     name = "limeqo"
 
+    #: censored-ALS completions averaged per fit
+    n_restarts = 1
+    #: TCNN hyper-parameters, sim and live alike
+    tcnn_kw = {"rank": 8, "conv1": 16, "conv2": 8}
+    #: TCNN fits without a 0.1% workload improvement before a cold start
+    reinit_patience = 3
+
     def __init__(
         self, *args, rank: int = 5, iters: int = 50, lam: float = 0.2,
-        alpha: float = ALPHA, beta: float = BETA, use_censored: bool = True, **kw,
+        alpha: float = ALPHA, beta: float = BETA, use_censored: bool = True,
+        model: str = "als", net_seed: int | None = None, n_nets: int = 1, **kw,
     ):
         super().__init__(*args, **kw)
         self.rank, self.iters, self.lam = rank, iters, lam
@@ -362,167 +418,37 @@ class LimeQOStrategy(Strategy):
         #: False = the "wocensored" ablation: cells still time out and pay
         #: their tolerance, but the completer IGNORES the censoring bounds
         self.use_censored = use_censored
-        self.pred: np.ndarray | None = None
-
-    def fit(self) -> None:
-        st = self.state
-        log_m = np.log1p(np.where(st.mask > 0, self.wl.matrix, 0.0))
-        log_cut = np.log1p(st.cutoffs) if self.use_censored else None
-        done = als_complete(
-            log_m, st.mask, self.rank, self.iters, self.lam,
-            seed=int(self.rng.integers(2**31)), nonnegative=True, cutoffs=log_cut,
-        )
-        self.pred = np.expm1(done)
-
-    def tolerance(self, i: int, j: int) -> float:
-        mo = self.state.min_observed()[i]
-        base = mo if np.isfinite(mo) else float(self.wl.matrix[:, 0].max())
-        if self.pred is not None:
-            return timeout_tolerance(base, self.pred[i, j], self.alpha, self.beta)
-        return self.alpha * base
-
-    def select(self) -> list[tuple[int, int]]:
-        st, pred = self.state, self.pred
-        assert pred is not None
-        out = rank_cells_by_improvement(pred, st.explored, st.min_observed(), self.k)
-        return self.random_fill(out)
-
-
-class LimeQOPlusStrategy(LimeQOStrategy):
-    """A21/A25-A27 LimeQO+: LimeQO's loop with a learned cost model in place
-    of pure matrix completion (reference ``src/strategies/limeqo_plus.py``).
-
-    Two cost models are available via ``model=``:
-
-    - ``"als"`` (default): restart-averaged censored ALS — rank-5
-      completions from ``n_restarts`` independent inits, predictions
-      averaged, k=16 batches (smaller than the reference's k=32 so the
-      plan-less model re-fits more often). This is the robust headless
-      fallback: the reference's TCNN trains on EXPLAIN plan trees, and no
-      plan corpus ships with its matrices.
-    - ``"tcnn"``: the executable :class:`~limeqo_spark.tcnn.NumpyTCNN` in
-      embeddings-only mode (every cell shares one dummy tree, reducing the
-      tree-CNN to a neural matrix factorization trained with the censored
-      hinge loss, warm-started across rounds). Measured on the reference
-      CEB matrix (docs/tcnn_sim_study_r3.json): a BETTER completer than
-      ALS (held-out log-RMSE 0.35 vs 0.54) but an init-sensitive explorer
-      — without mitigation, final workload latency at the 0.75 h CEB
-      checkpoint ranges 1.29-2.53 h across weight inits vs the ALS
-      fallback's robust 1.44 h, because exploration feeds on prediction
-      noise that averaging or calibration destroys. Round-4 mitigation:
-      stall-triggered re-initialization (see ``reinit_patience`` in
-      ``__init__``) detects a bad draw online and re-draws, compressing
-      the nine-unselected-init spread to median 1.346 h / mean 1.52 h.
-      With ``net_seed`` pinned a run is deterministic (the improvement
-      ranking fills every batch, so the exploration rng never fires).
-      Round-5 mitigation for the slow-divergence mode the stall trigger
-      misses: the per-measurement budget-rationality cap (see
-      :meth:`tolerance` and docs/tcnn_rescue_r5.json) — worst-of-5 fixed
-      inits 2.02 -> 1.50 h at CEB@0.75h, median 1.377 h.
-      Round-11 mitigation (VERDICT r10 #6): restart-averaging — ``n_nets``
-      independently-initialized nets trained per fit, predictions averaged
-      (``net_combine``). On CEB@0.75h over the five fixed inits, n_nets=3
-      mean improves the median 1.3745 -> 1.3267 h and the worst 1.4555 ->
-      1.3708 h (docs/tcnn_ensemble_lab_r11.json; ens5/median configs each
-      had one diverged seed — ens3_mean dominates on median AND worst).
-      Also the live-mode model, where the TCNN gets REAL plan trees
-      (:meth:`limeqo_spark.live.LiveSteeringSession.explore`).
-    """
-
-    name = "limeqo_plus"
-
-    #: completions averaged per fit — without plan features, prediction
-    #: variance (not bias) is what costs exploration time; averaging
-    #: independent censored-ALS restarts is the cheap variance reducer
-    n_restarts = 3
-    #: embeddings-only TCNN hyperparameters (see docstring)
-    tcnn_kw = {"rank": 8, "conv1": 16, "conv2": 8}
-    #: AdamW decay on the query/hint embeddings (0.0 = reference's plain
-    #: Adam; measured worse on CEB — docs/tcnn_sim_study_r3.json lab)
-    tcnn_weight_decay = 0.0
-    #: TCNN explorer's per-measurement spend ceiling as a fraction of the
-    #: exploration budget (see :meth:`tolerance`)
-    tolerance_budget_frac = 0.02
-    #: ensemble gate config (see :meth:`_select_agreement_gated`): the ALS
-    #: veto list is gate_width*k deep; unfilled slots come from this model
-    ensemble_gate_width = 4
-    ensemble_fill = "als"
-
-    def __init__(
-        self, *args, rank: int = 5, iters: int = 50, lam: float = 0.2,
-        model: str = "als", net_seed: int | None = None, n_nets: int = 1,
-        net_combine: str = "mean", **kw,
-    ):
-        # k=16, not the reference's k=32: the TCNN's plan features justify
-        # big batches; the headless fallback re-fits more often instead.
-        # Measured (3 seeds, reference matrices @ published checkpoints):
-        # CEB 1.53->1.44 h, JOB 107.3->105.6 s, DSB ~equal (3.29/3.31 h,
-        # both well under the 3.407 h baseline).
-        #
-        # ``net_seed`` pins the TCNN's weight init independently of the
-        # exploration seed. With it pinned the whole model='tcnn' run is
-        # DETERMINISTIC: the improvement ranking fills every batch, so the
-        # strategy rng (used only for random_fill top-ups) never fires —
-        # measured identical finals across exploration seeds 1-3 on CEB.
-        # The init-to-init spread documented in docs/tcnn_sim_study_r3.json
-        # (1.31-1.59 h) is therefore entirely the weight draw, and pinning
-        # it is the reference's own reproducibility idiom
-        # (np.random.seed(42), limeqo.ipynb cell 1).
-        kw.setdefault("k", 16)
-        super().__init__(*args, rank=rank, iters=iters, lam=lam, **kw)
         self.model = model
+        #: TCNN weight-init seed, independent of the exploration seed: with
+        #: it pinned a model="tcnn" run is deterministic (the reference's
+        #: idiom, np.random.seed(42) in limeqo.ipynb cell 1)
         self.net_seed = net_seed
-        #: restart-averaged TCNN (r11, VERDICT r10 #6): train ``n_nets``
-        #: independently-initialized nets on the same observations each
-        #: fit and combine their prediction matrices (``net_combine`` =
-        #: mean|median). The per-init final-latency spread is exploration
-        #: feeding on init noise; averaging independent inits is the
-        #: variance reducer that doesn't touch the architecture. Distinct
-        #: from the r3-r6 NEGATIVE (TCNN-with-ALS prediction averaging,
-        #: which mixes MODEL CLASSES and blunts the TCNN's edge).
+        #: independently-initialized TCNNs trained per fit, predictions
+        #: averaged (docs/tcnn_ensemble_lab_r11.json)
         self.n_nets = n_nets
-        self.net_combine = net_combine
-        self._tcnn = None
+        self.pred: np.ndarray | None = None
         self._tcnns: list | None = None
-        # stall-triggered re-init (round 4): exploration outcome is chaotic
-        # in the weight init (docs/tcnn_sim_study_r3.json — seeds split
-        # ~60/40 between ~1.31 h and 1.58-2.5 h finals on CEB despite
-        # identical training loss). A bad init is detectable ONLINE: its
-        # batches stop improving the workload total. When the total
-        # improves <0.1% for ``reinit_patience`` consecutive fits, discard
-        # the net and cold-start from a derived seed (net_seed + 7919*n —
-        # deterministic). Re-training costs no exploration budget (the sim
-        # charges query execution only; train/infer walls are recorded
-        # separately, matching the reference's accounting). Patience chosen
-        # on the MEDIAN over nine unselected inits (CEB@0.75h: patience
-        # 3 -> 1.346 h, 5 -> 1.404 h, 8 -> 1.577 h, none -> 1.577 h) — an
-        # aggregate sweep, not a per-seed pick.
-        self.reinit_patience = 3
         self._reinits = 0
         self._stall = 0
         self._last_total = float("inf")
 
     def fit(self) -> None:
-        if self.model == "tcnn":
-            self._fit_tcnn()
-            return
-        if self.model == "ensemble":
-            # selection-level ensemble (VERDICT r8 #5b): fit BOTH models.
-            # Prediction-level averaging was a measured NEGATIVE (r3-r6,
-            # docs/tcnn_sim_study_r3.json — it destroys the TCNN explorer's
-            # edge), so the combination happens in select(), not here.
-            self._fit_tcnn()
-            self._tcnn_pred = self.pred
-            self._fit_als()
-            self._als_pred = self.pred
-            self.pred = self._tcnn_pred  # primary estimator stays the TCNN
-            return
-        self._fit_als()
+        {"als": self._fit_als, "plan": self._fit_plan, "tcnn": self._fit_tcnn}[self.model]()
+
+    def _labels(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """The training cells of the plan-based models: (query, hint,
+        latency, cutoff) per revealed cell (cutoff 0) and per censored one
+        (latency 0)."""
+        st = self.state
+        qi, hj = np.nonzero((st.mask > 0) | (st.cutoffs > 0))
+        observed = st.mask[qi, hj] > 0
+        lat = np.where(observed, st.matrix[qi, hj], 0.0)
+        return qi, hj, lat, np.where(observed, 0.0, st.cutoffs[qi, hj])
 
     def _fit_als(self) -> None:
         st = self.state
-        log_m = np.log1p(np.where(st.mask > 0, self.wl.matrix, 0.0))
-        log_cut = np.log1p(st.cutoffs)
+        log_m = np.log1p(np.where(st.mask > 0, st.matrix, 0.0))
+        log_cut = np.log1p(st.cutoffs) if self.use_censored else None
         preds = []
         for _ in range(self.n_restarts):
             done = als_complete(
@@ -532,81 +458,69 @@ class LimeQOPlusStrategy(LimeQOStrategy):
             preds.append(np.expm1(done))
         self.pred = np.mean(preds, axis=0)
 
+    def _fit_plan(self) -> None:
+        from limeqo_spark.tcnn import RidgeCostModel
+
+        (feats, _), tree_id = self.state.trees()
+        q, h = tree_id.shape
+        x = np.hstack([feats.sum(axis=1)[tree_id.ravel()], np.tile(np.eye(h), (q, 1))])
+        qi, hj, lat, cut = self._labels()
+        self.pred = RidgeCostModel().fit(x[qi * h + hj], lat, cut).predict(x).reshape(q, h)
+
     def _fit_tcnn(self) -> None:
-        """Embeddings-only NumpyTCNN fit over every explored cell (revealed
-        value or censoring cutoff), warm-started across rounds; reference
-        training-loop semantics (800-epoch cold fit, 200-epoch refits,
-        loss<0.1 plateau early-stop — limeqo_plus.py:193-234)."""
-        from limeqo_spark.tcnn import NumpyTCNN, dummy_tree
+        """NumpyTCNN fit over every labeled cell with the reference's
+        training loop (800-epoch cold fit, 200-epoch refits, loss<0.1
+        plateau early-stop — limeqo_plus.py:193-234).
+
+        Exploration outcome is chaotic in the weight init, and a bad init
+        shows online: its batches stop improving the workload total. After
+        ``reinit_patience`` fits with less than 0.1% improvement the nets
+        cold-start from a derived seed (net_seed + 7919 * n;
+        docs/tcnn_sim_study_r3.json)."""
+        from limeqo_spark.tcnn import NumpyTCNN
 
         st = self.state
         total = float(st.min_observed().sum())
         if total >= self._last_total * (1 - 1e-3):
             self._stall += 1
             if self._stall >= self.reinit_patience and self._tcnns is not None:
-                # bad init detected: cold-start the whole ensemble
-                self._tcnn = self._tcnns = None
+                self._tcnns = None
                 self._reinits += 1
                 self._stall = 0
         else:
             self._stall = 0
         self._last_total = min(self._last_total, total)
-        cells = np.argwhere((st.mask > 0) | (st.cutoffs > 0))
-        qi, hj = cells[:, 0], cells[:, 1]
-        observed = st.mask[qi, hj] > 0
-        lat = np.where(observed, self.wl.matrix[qi, hj], 0.0)
-        cut = np.where(observed, 0.0, st.cutoffs[qi, hj])
+        trees, tree_id = st.trees()
+        qi, hj, lat, cut = self._labels()
+        q, h = tree_id.shape
+        epochs = 200
         if self._tcnns is None:
-            base = (
-                self.net_seed
-                if self.net_seed is not None
-                else int(self.rng.integers(2**31))
-            )
-            # derived seeds: reinit shifts by 7919 (the r4 idiom), ensemble
-            # members shift by 104729 so no (reinit, member) pair collides
+            base = self.net_seed if self.net_seed is not None else int(self.rng.integers(2**31))
+            # members shift by 104729 so no (reinit, member) seed collides
             self._tcnns = [
                 NumpyTCNN(
-                    4, *self.wl.matrix.shape,
-                    seed=base + 7919 * self._reinits + 104729 * m,
-                    **self.tcnn_kw,
+                    trees[0].shape[-1], q, h,
+                    seed=base + 7919 * self._reinits + 104729 * m, **self.tcnn_kw,
                 )
                 for m in range(self.n_nets)
             ]
             epochs = 800
-        else:
-            epochs = 200
-        self._dummy = dummy_tree(4)
-        q, h = self.wl.matrix.shape
         allq, allh = np.meshgrid(np.arange(q), np.arange(h), indexing="ij")
         preds = []
         for net in self._tcnns:
-            net.fit(
-                self._dummy, np.zeros(len(qi), dtype=np.int64), qi, hj, lat, cut,
-                epochs=epochs, lr=1e-2, weight_decay=self.tcnn_weight_decay,
-            )
+            net.fit(trees, tree_id[qi, hj], qi, hj, lat, cut, epochs=epochs, lr=1e-2)
             preds.append(
-                net.predict(
-                    self._dummy, np.zeros(q * h, dtype=np.int64),
-                    allq.ravel(), allh.ravel(),
-                ).reshape(q, h)
+                net.predict(trees, tree_id.ravel(), allq.ravel(), allh.ravel()).reshape(q, h)
             )
-        stacked = np.stack(preds)
-        if self.net_combine == "median":
-            self.pred = np.median(stacked, axis=0)
-        elif self.net_combine == "gmean":
-            # geometric mean: latency prediction error is multiplicative,
-            # so averaging in log space keeps one net's overestimate from
-            # dominating the combined cell the way an arithmetic mean does
-            self.pred = np.expm1(np.mean(np.log1p(np.clip(stacked, 0, None)), axis=0))
-        else:
-            self.pred = np.mean(stacked, axis=0)
-        self._tcnn = self._tcnns[0]  # back-compat handle (tests, live mode)
+        self.pred = np.mean(preds, axis=0)
+
+    def tolerance(self, i: int, j: int) -> float:
+        return timeout_tolerance(
+            self.state.min_observed()[i], self.pred[i, j], self.alpha, self.beta
+        )
 
     def select(self) -> list[tuple[int, int]]:
         st = self.state
-        assert self.pred is not None
-        if self.model == "ensemble":
-            return self.random_fill(self._select_agreement_gated())
         # the free-form TCNN needs the absolute-gain guard (see
         # rank_cells_by_improvement); the multiplicative ALS does not
         min_gain = 0.01 if self.model == "tcnn" else 0.0
@@ -615,70 +529,57 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         )
         return self.random_fill(out)
 
-    def _select_agreement_gated(self) -> list[tuple[int, int]]:
-        """Agreement-gated batch (VERDICT r8 #5b): a TCNN pick enters the
-        batch only if the restart-averaged censored ALS ALSO ranks it in
-        its own extended top list — the TCNN keeps its precise ordering,
-        the ALS veto filters the init-noise picks that cost mid-checkpoint
-        budget; the remainder fills from the ALS ranking (the robust
-        explorer — plain-LimeQO beats ITS baseline on CEB), then TCNN.
-        MEASURED NEGATIVE on CEB (docs/ensemble_lab_r9.json): the veto
-        shapes batches toward expensive ALS-style reveals, cutting the
-        round count ~4x per budget; kept as a reproducible config, not
-        used by bench."""
-        st = self.state
-        mo = st.min_observed()
-        wide = self.ensemble_gate_width * self.k
-        t_ranked = rank_cells_by_improvement(
-            self._tcnn_pred, st.explored, mo, wide, min_gain=0.01
-        )
-        a_ranked = rank_cells_by_improvement(self._als_pred, st.explored, mo, wide)
-        a_set = set(a_ranked)
-        out = [c for c in t_ranked if c in a_set][: self.k]
-        fills = (
-            a_ranked + t_ranked if self.ensemble_fill == "als" else t_ranked + a_ranked
-        )
-        for c in fills:
-            if len(out) >= self.k:
-                break
-            if c not in out:
-                out.append(c)
-        return out
 
+class LimeQOPlusStrategy(LimeQOStrategy):
+    """A21/A25-A27 LimeQO+ (reference ``src/strategies/limeqo_plus.py``):
+    LimeQO's loop with k=16 batches, three restart-averaged censored-ALS
+    completions per fit (``model="als"``, the default) or the
+    embeddings-only TCNN (``model="tcnn"``; no plan corpus ships with the
+    reference matrices), the TCNN's per-measurement spend cap
+    (:meth:`tolerance`), and the reference's stop at 95% of the perfect
+    improvement.
+
+    The stop rule reads the workload's default and optimal times, so
+    LimeQO+ runs on a measured matrix only; a live session explores with
+    :class:`LimeQOStrategy` and its ``model=``."""
+
+    name = "limeqo_plus"
+
+    #: without plan features, prediction variance (not bias) is what costs
+    #: exploration time; averaging restarts is the cheap variance reducer
+    n_restarts = 3
+    #: TCNN explorer's per-measurement spend ceiling as a fraction of the
+    #: exploration spend so far (see :meth:`tolerance`)
+    tolerance_budget_frac = 0.02
     #: floor (seconds of exploration spend) under which the spent-scaled
     #: cap stops tightening — early probes may cost up to 2% x 300 s
     tolerance_spent_floor = 300.0
 
-    def tolerance(self, i: int, j: int) -> float:
-        """LimeQO's timeout guard, plus the TCNN explorer's BUDGET-
-        RATIONALITY CAP: no single measurement may cost more than
-        ``tolerance_budget_frac`` x max(spent-so-far, 300 s). The r4 stall
-        re-init misses slow-divergence — net_seed 0 finished CEB@0.75h at
-        2.02 h vs ~1.35 for seeds 1-4 because its trajectory dumps huge
-        budget chunks into single expensive reveals (one 0.28 h reveal =
-        38% of the whole budget) while healthy inits harvest cheap wins.
-        Capping per-measurement spend converts those into bounded censored
-        observations (the model still learns the "at least this slow"
-        bound) and is a uniform policy, not per-seed tuning.
+    def __init__(self, *args, **kw):
+        # k=16, not the reference's k=32: the TCNN's plan features justify
+        # big batches; the headless fallback re-fits more often instead.
+        # Measured (3 seeds, reference matrices @ published checkpoints):
+        # CEB 1.53->1.44 h, JOB 107.3->105.6 s, DSB ~equal (3.29/3.31 h,
+        # both well under the 3.407 h baseline).
+        kw.setdefault("k", 16)
+        super().__init__(*args, **kw)
 
-        Round 6 (VERDICT r5 next-round #2): the cap anchor is SPENT
-        exploration time, not the total budget — probes must stay cheap
-        until exploration has earned bigger ones. The r5 budget-anchored
-        cap (2% x time_budget) left a 12 h-budget run free to burn 864 s
-        per probe from minute one, which is exactly where the one >10%
-        CEB parity cell (limeqo_plus @3h, ratio 1.11 — one bad-init rep)
-        lived. The spent anchor equals the budget anchor by the end of a
-        run, is much tighter during the early hours, and is budget-FREE
-        (disciplines unbounded runs too). Chosen by the same worst-case
-        sweep over five fixed unselected inits (CEB@0.75h — spent-scaled:
-        worst 1.4555 / median 1.3745 vs the budget cap's 1.497 / 1.377;
-        budget-cap frac sweep and the three REJECTED designs in
-        docs/tcnn_rescue_r5.json, full fixed-init + grid re-run in
-        docs/tcnn_cap_r6.json). Applied only to the free-form TCNN
-        explorer; the ALS strategies never exhibit the failure and keep
-        the reference's exact guard."""
+    # an entry of its own, so per-class instrumentation (perfbench's
+    # tracer) finds it in this class's __dict__
+    select = LimeQOStrategy.select
+
+    def tolerance(self, i: int, j: int) -> float:
+        """LimeQO's timeout guard, plus the TCNN explorer's budget-
+        rationality cap: no single measurement may cost more than
+        ``tolerance_budget_frac`` x max(spent so far, 300 s). A bad TCNN
+        init can dump large budget chunks into single expensive reveals;
+        the cap turns those into bounded censored observations (the model
+        still learns the "at least this slow" bound), and anchoring on the
+        spend keeps probes cheap until exploration has earned bigger ones
+        (docs/tcnn_rescue_r5.json, docs/tcnn_cap_r6.json). The ALS model
+        keeps the reference's exact guard."""
         tol = super().tolerance(i, j)
-        if self.model in ("tcnn", "ensemble"):
+        if self.model == "tcnn":
             anchor = max(self.state.spent, self.tolerance_spent_floor)
             tol = min(tol, self.tolerance_budget_frac * anchor)
         return tol
@@ -729,14 +630,14 @@ class MLlibLimeQOStrategy(LimeQOStrategy):
         from limeqo_spark.complete import mllib_als_complete
 
         st = self.state
-        q, h = self.wl.matrix.shape
+        q, h = st.mask.shape
         qi, hi = np.meshgrid(np.arange(q), np.arange(h), indexing="ij")
         obs = st.mask.ravel() > 0
         pdf = pd.DataFrame(
             {
                 "query_idx": qi.ravel().astype(np.int64),
                 "hint_id": hi.ravel().astype(np.int32),
-                "latency": np.where(obs, self.wl.matrix.ravel(), 0.0),
+                "latency": np.where(obs, st.matrix.ravel(), 0.0),
                 "observed": obs,
             }
         )

@@ -20,15 +20,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from limeqo_spark.report import checkpoint_table
+from limeqo_spark.run_experiment import load_dataset
 from limeqo_spark.strategies import (
     GreedyStrategy,
     LimeQOPlusStrategy,
     LimeQOStrategy,
     RandomStrategy,
 )
-from limeqo_spark.workload import Workload
-
-REF = "/root/reference/dataset"
 
 #: published checkpoint tables (BASELINE.md §curves; result/{ds}.csv)
 BASELINE = {
@@ -63,7 +61,7 @@ def run_dataset(ds: str, out_root: str, reps: int) -> dict:
     spec = BASELINE[ds]
     to_s = 3600.0 if spec["unit"] == "h" else 1.0
     budget = spec["grid"][-1] * to_s
-    wl = Workload.from_reference(f"{REF}/{ds}-matrix.csv", f"{REF}/init_{ds}_mask.npy")
+    wl = load_dataset(ds)
     out_dir = os.path.join(out_root, ds)
     os.makedirs(out_dir, exist_ok=True)
 

@@ -82,10 +82,10 @@ def test_plan_model_exploration(spark):
     before = int(s.explored.sum())
     s.explore(rounds=2, k=3, model="plan")
     assert int(s.explored.sum()) > before
-    # features exist for explored cells and have plan + hint parts
-    qi, hj = map(int, np.argwhere(s.explored > 0)[-1])
-    f = s._features(qi, hj)
-    assert f.shape[0] > len(s.hint_sets) and np.isfinite(f).all()
+    # the model's input: every cell's plan parsed into a multi-node tree
+    (feats, children), tree_id = s.trees()
+    assert tree_id.shape == s.explored.shape and feats.shape[:2] == children.shape[:2]
+    assert (feats.sum(axis=(1, 2)) > 1).all() and np.isfinite(feats).all()
     best = s.best_hints()
     assert "dim" in best and best["dim"][1] > 0
 
@@ -141,7 +141,10 @@ def test_manifest_queries_steerable(spark):
 def test_tcnn_model_exploration_on_real_plans(spark):
     """LimeQO+ live with the executable numpy tree-CNN: exploration over
     REAL EXPLAIN trees makes progress; the fitted model's training loss
-    converged and predictions are positive finite."""
+    converged and predictions are positive finite. The loop is explore()'s
+    (a LimeQOStrategy over the session), built here to reach the nets."""
+    from limeqo_spark.strategies import LimeQOStrategy
+
     def dim_join():
         n = table(spark, SF, "nation")
         r = table(spark, SF, "region")
@@ -150,10 +153,14 @@ def test_tcnn_model_exploration_on_real_plans(spark):
     s = LiveSteeringSession(spark, {"dim": dim_join}, iters=10, warmup=False)
     s.bootstrap(timeout_s=120.0)
     before = int(s.explored.sum())
-    s.explore(rounds=2, k=3, model="tcnn")
+    strat = LimeQOStrategy(
+        None, k=3, max_rounds=2, slack=None, state=s, model="tcnn"
+    )
+    strat.run()
     assert int(s.explored.sum()) > before
-    assert s._tcnn is not None and len(s._tcnn.loss_curve) > 0
-    assert np.isfinite(s._tcnn.loss_curve[-1])
+    net = strat._tcnns[0]
+    assert len(net.loss_curve) > 0 and np.isfinite(net.loss_curve[-1])
+    assert (strat.pred > 0).all() and np.isfinite(strat.pred).all()
     best = s.best_hints()
     assert "dim" in best and best["dim"][1] > 0
 
@@ -301,8 +308,8 @@ def test_fingerprint_replan_matches_rebuild(spark):
 def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
     """One build per (query, distinct join hint) and one EXPLAIN per cell,
     all in the fingerprint pass: bootstrap and an explore round execute
-    the frames it built, and the plan featurizers read the cached EXPLAIN
-    text, so none of them builds or EXPLAINs again."""
+    the frames it built, and the plan trees are parsed from the cached
+    EXPLAIN text, so none of them builds or EXPLAINs again."""
     import limeqo_spark.live as live_mod
     from limeqo_spark import plans, steer
     from limeqo_spark.workloads import steering_workload
@@ -336,10 +343,8 @@ def test_fingerprint_pass_builds_once_per_join_hint(spark, monkeypatch):
     assert sum(o.measured for o in s.observations) > len(builds)  # explore ran cells
     assert builds == {qid: len(join_hints) for qid in builds}
     assert explains[0] == len(s.hint_sets) * len(builds)
-    for qi in range(len(s.query_ids)):
-        for hj in range(len(s.hint_sets)):
-            assert np.isfinite(s._features(qi, hj)).all()
-            feats, children = s._flat_tree(qi, hj)
-            assert len(feats) == len(children)
+    (feats, children), tree_id = s.trees()
+    assert tree_id.shape == (len(builds), len(s.hint_sets))
+    assert feats.shape[:2] == children.shape[:2] and np.isfinite(feats).all()
     assert builds == {qid: len(join_hints) for qid in builds}
     assert explains[0] == len(s.hint_sets) * len(builds)

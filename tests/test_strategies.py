@@ -1,6 +1,7 @@
 """Strategy simulation golden tests on the reference's JOB matrix
 (SURVEY §5.2.4): curves bounded by [opt, default], monotone improvement,
-LimeQO beats Random at equal exploration budget."""
+LimeQO beats Random at equal exploration budget. The loop invariants also
+run on a seeded synthetic matrix, which needs no reference data."""
 
 from __future__ import annotations
 
@@ -37,17 +38,26 @@ def job(reference_dataset) -> Workload:
     )
 
 
+@pytest.fixture(params=["job", "synthetic"])
+def workload(request) -> Workload:
+    if request.param == "job":
+        return request.getfixturevalue("job")
+    return Workload.synthetic_low_rank(noise=0.2, seed=1)
+
+
 # bao is excluded here: it requires a time_budget by contract and reports
 # CURRENT-POLICY latency (not best-observed), so it has its own invariant
 # test (test_bao_baseline_guarded_and_greedy)
 @pytest.mark.parametrize("name", sorted(set(STRATEGIES) - {"bao"}))
-def test_strategy_invariants(job, name):
-    strat = STRATEGIES[name](job, k=8, seed=1, max_rounds=12)
+def test_strategy_invariants(workload, name):
+    strat = STRATEGIES[name](workload, k=8, seed=1, max_rounds=12)
     records = strat.run()
     assert len(records) >= 2
     lat = [r["total_latency"] for r in records]
     # bounded by [opt, default]
-    assert all(job.opt_time - 1e-6 <= x <= job.default_time + 1e-6 for x in lat), name
+    assert all(
+        workload.opt_time - 1e-6 <= x <= workload.default_time + 1e-6 for x in lat
+    ), name
     # monotone non-increasing: more observations can only improve the best
     assert all(a >= b - 1e-9 for a, b in zip(lat, lat[1:])), name
     assert REQUIRED_METRIC_KEYS <= set(records[0])
@@ -114,10 +124,10 @@ def test_greedy_rounds_count_successes_not_attempts():
     assert revealed == 8  # ...yet the round still delivered k reveals
 
 
-def test_censoring_accounting(job):
+def test_censoring_accounting(workload):
     """Timeout-as-censoring: spent time never exceeds revealed + tolerances,
     and censored cells never reveal their value."""
-    lq = LimeQOStrategy(job, k=8, seed=7, max_rounds=10)
+    lq = LimeQOStrategy(workload, k=8, seed=7, max_rounds=10)
     lq.run()
     st = lq.state
     censored = (st.cutoffs > 0) & (st.mask == 0)
@@ -249,30 +259,3 @@ def test_tcnn_budget_rationality_cap(job):
     free = LimeQOPlusStrategy(job, model="tcnn", net_seed=1)
     free.pred = np.full(job.matrix.shape, 1e9)
     assert free.tolerance(heavy, 1) <= floor_cap + 1e-9
-
-
-def test_ensemble_model_runs_and_respects_batch_contract(job):
-    """The r9 agreement-gated ensemble config (measured NEGATIVE for the
-    CEB mid-checkpoints — docs/ensemble_lab_r9.json — but kept as a
-    documented configuration): fits both models, selects at most k
-    distinct unexplored cells, applies the TCNN spend cap, and completes
-    a budgeted run without error."""
-    from limeqo_spark.strategies import LimeQOPlusStrategy
-
-    s = LimeQOPlusStrategy(
-        job, model="ensemble", net_seed=1, time_budget=30.0, max_rounds=50
-    )
-    rec = s.run()
-    assert len(rec) >= 2
-    assert rec[-1]["total_latency"] <= rec[0]["total_latency"] + 1e-9
-    # selection contract on a fresh fit: k distinct unexplored cells
-    s2 = LimeQOPlusStrategy(job, model="ensemble", net_seed=1)
-    s2.fit()
-    cells = s2.select()
-    assert len(cells) == len(set(cells)) <= s2.k
-    for i, j in cells:
-        assert s2.state.explored[i, j] == 0
-    # the spent-scaled cap applies to the ensemble explorer too
-    s2.pred = __import__("numpy").full(job.matrix.shape, 1e9)
-    floor_cap = s2.tolerance_budget_frac * s2.tolerance_spent_floor
-    assert s2.tolerance(0, 1) <= floor_cap + 1e-9
