@@ -2,9 +2,13 @@
 timeout-as-censoring (SURVEY §3.3 step 4, §4.3).
 
 This is the driver->cluster boundary the reference only simulates: a hinted
-run either completes (observed latency) or is killed at the wall-clock
-budget (censored at the budget). Cancellation uses Spark job groups so a
-timed-out query releases cluster resources.
+run either completes (observed latency) or is stopped at the wall-clock
+budget (censored at the budget). Each run has its own Spark job group. On
+timeout that group is cancelled together with its future jobs: the jobs
+active then stop and later ones are rejected. The cancel is repeated until
+the run's thread returns, because Spark checks the shuffle map-stage jobs
+AQE submits against no cancelled group. So a censored cell costs about its
+budget (tests/test_steering.py::test_censored_run_completes_no_job).
 """
 
 from __future__ import annotations
@@ -19,6 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
 from limeqo_spark.plans import explain_formatted, replanned
+
+# how long a cancelled run's thread may take to return before run_steered
+# gives up on it, and how often the cancel is repeated meanwhile
+_CANCEL_WAIT_S = 30.0
+_RECANCEL_EVERY_S = 0.01
 
 
 @dataclass
@@ -39,7 +48,12 @@ def run_steered(
 
     ``df`` is the frame :func:`hint_plans` built for the set's join hint;
     the write plans it afresh under the applied confs, so it runs the plan
-    that pass fingerprinted.
+    that pass fingerprinted. ``timeout_s=None`` waits for the run; any
+    other value, 0 included, is the budget, past which the run is stopped
+    as the module docstring describes: its active jobs, its later jobs and
+    AQE's map-stage jobs are cancelled. A run whose thread is still alive
+    ``_CANCEL_WAIT_S`` after the cancel raises RuntimeError instead of
+    running on unseen.
     """
     with H.applied(spark, hint_set):
         group = f"limeqo-steer-{uuid.uuid4().hex[:12]}"
@@ -59,13 +73,23 @@ def run_steered(
         t0 = time.perf_counter()
         worker = threading.Thread(target=execute, daemon=True)
         worker.start()
-        finished = done.wait(timeout=timeout_s) if timeout_s else (done.wait() or True)
+        finished = done.wait(timeout=timeout_s)
         elapsed = time.perf_counter() - t0
 
         if not finished:
-            sc.cancelJobGroup(group)
-            done.wait(timeout=30)
-            return SteeredRun(hint_set.hint_id, None, float(timeout_s))
+            deadline = time.perf_counter() + _CANCEL_WAIT_S
+            # PySpark has no wrapper for it; the group stays on Spark's
+            # bounded cancelled-group list (numCancelledJobGroupsToTrack)
+            cancel = sc._jsc.sc().cancelJobGroupAndFutureJobs
+            while True:
+                cancel(group)
+                if done.wait(timeout=_RECANCEL_EVERY_S):
+                    return SteeredRun(hint_set.hint_id, None, float(timeout_s))
+                if time.perf_counter() >= deadline:
+                    raise RuntimeError(
+                        f"steered run hint={hint_set.hint_id} (job group {group}) "
+                        f"still running {_CANCEL_WAIT_S:g}s after its cancel"
+                    )
         if err:
             raise err[0]
         return SteeredRun(hint_set.hint_id, elapsed, None)

@@ -3,15 +3,21 @@ valid run, results are hint-invariant, plan hashes dedup equivalent plans."""
 
 from __future__ import annotations
 
+import threading
+import time
+import uuid
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from limeqo_spark import hints as H
 from limeqo_spark import plans as P
+from limeqo_spark import steer
 from limeqo_spark.io import table
 from limeqo_spark.live import LiveSteeringSession
-from limeqo_spark.steer import run_steered
+from limeqo_spark.steer import hint_plans, run_steered
+from limeqo_spark.workloads import steering_workload
 
 SF = "/root/testdata/sf0.001"
 
@@ -106,8 +112,9 @@ def test_canonicalize_strips_session_noise():
 
 def test_run_steered_timeout_censors(spark):
     def slow():
-        # a deliberately heavy cross join at sf0.001 — big enough to outlive
-        # a 0.05 s budget, small enough to finish quickly after cancellation
+        # a deliberately heavy cross join at sf0.001, big enough to outlive
+        # a 0.05 s budget; the cancel stops it there (what it stops is
+        # checked job by job in test_censored_run_completes_no_job)
         li = table(spark, SF, "lineitem").select("l_orderkey")
         return li.crossJoin(li.selectExpr("l_orderkey as r")).selectExpr(
             "count(*) as n"
@@ -116,6 +123,86 @@ def test_run_steered_timeout_censors(spark):
     run = run_steered(spark, slow(), H.REGISTRY[0], timeout_s=0.05)
     assert run.latency is None
     assert run.censor_cutoff == pytest.approx(0.05)
+
+
+def test_run_steered_zero_budget_censors_at_zero(spark):
+    run = run_steered(spark, join_query(spark)(), H.REGISTRY[0], timeout_s=0.0)
+    assert run.latency is None
+    assert run.censor_cutoff == 0.0
+
+
+def _poll(cond, what: str, limit_s: float = 120.0) -> None:
+    deadline = time.monotonic() + limit_s
+    while not cond():
+        assert time.monotonic() < deadline, f"status tracker never showed {what}"
+        time.sleep(0.02)
+
+
+def _marker_job(sc) -> int:
+    """Run a one-task job on a fresh thread in its own job group and return
+    its id once the status tracker knows it. Job ids rise in submission
+    order and listener events arrive in order, so every job submitted
+    before the marker is in the tracker by then."""
+    group = f"marker-{uuid.uuid4().hex[:12]}"
+
+    def run() -> None:
+        sc.setJobGroup(group, "marker")
+        sc.parallelize([0], 1).count()
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    _poll(lambda: sc.statusTracker().getJobIdsForGroup(group), f"job group {group}")
+    return sc.statusTracker().getJobIdsForGroup(group)[0]
+
+
+@pytest.mark.parametrize("hint_id", [0, 17, 48])
+def test_censored_run_completes_no_job(spark, sf_dir, hint_id):
+    """A run censored at 1 ms stops there: no job it created, neither its
+    own nor a shuffle map-stage job AQE submitted after the cancel, runs
+    to success."""
+    hs = H.REGISTRY[hint_id]
+    frames, _ = hint_plans(spark, steering_workload(spark, sf_dir)["star_5way"], [hs])
+    sc = spark.sparkContext
+    lo = _marker_job(sc)
+    run = run_steered(spark, frames[hs.join_hint], hs, timeout_s=0.001)
+    hi = _marker_job(sc)
+    assert run.latency is None and run.censor_cutoff == pytest.approx(0.001)
+
+    tracker = sc.statusTracker()
+
+    def statuses() -> dict[int, str]:
+        infos = {j: tracker.getJobInfo(j) for j in range(lo + 1, hi)}
+        return {j: i.status for j, i in infos.items() if i is not None}
+
+    _poll(lambda: "RUNNING" not in statuses().values(), "the run's jobs ended")
+    succeeded = [j for j, st in statuses().items() if st == "SUCCEEDED"]
+    assert not succeeded, f"censored hint {hint_id} run completed jobs {succeeded}"
+
+
+def test_run_steered_raises_when_the_run_outlives_its_cancel(spark, monkeypatch):
+    release = threading.Event()
+
+    class Blocking:
+        """Stands in for a frame whose write ignores the cancel."""
+
+        write = property(lambda self: self)
+
+        def format(self, _name):
+            return self
+
+        def mode(self, _mode):
+            return self
+
+        def save(self):
+            release.wait()
+
+    monkeypatch.setattr(steer, "_CANCEL_WAIT_S", 0.2)
+    try:
+        with pytest.raises(RuntimeError, match=r"hint=17 \(job group limeqo-steer-\w+\)"):
+            run_steered(spark, Blocking(), H.REGISTRY[17], timeout_s=0.01)
+    finally:
+        release.set()
 
 
 def test_plan_tree_parse_and_featurize(spark):
