@@ -142,13 +142,14 @@ REGISTRY: list[HintSet] = build_registry()
 def applied(spark: SparkSession, hint_set: HintSet):
     """Apply a HintSet — conf overrides plus the relation-level join hint
     (picked up by io.table) — restoring prior state on exit. Queries must be
-    *built* inside this context for both levers to take effect."""
+    *built* inside this context for both levers to take effect. Every key
+    saved is restored on any exit, also when Spark rejects a later value."""
     saved: dict[str, str | None] = {}
-    for k, v in hint_set.confs.items():
-        saved[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
     token = _ACTIVE_JOIN_HINT.set(hint_set.join_hint)
     try:
+        for k, v in hint_set.confs.items():
+            saved[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
         yield hint_set
     finally:
         _ACTIVE_JOIN_HINT.reset(token)

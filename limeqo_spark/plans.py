@@ -56,10 +56,11 @@ NODE_VOCABULARY: tuple[str, ...] = (
 
 def explain_formatted(df: DataFrame) -> str:
     """EXPLAIN FORMATTED text of a DataFrame's physical plan."""
-    # short class names resolve through the imports of PySpark's gateway
-    # (org.apache.spark.sql.api.python.*, org.apache.spark.sql.classic.*)
-    # in one py4j round trip instead of one per package segment
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    # by its dotted name: one py4j lookup that hits. py4j resolves a short
+    # name by probing it and then each of the gateway's star imports, and
+    # each miss scans the whole driver classpath
+    utils = getattr(df.sparkSession._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+    return utils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def replanned(df: DataFrame) -> DataFrame:
@@ -68,8 +69,9 @@ def replanned(df: DataFrame) -> DataFrame:
     re-running the Python code that built it. Relation hints already in the
     analyzed plan carry over unchanged."""
     spark = df.sparkSession
-    # Dataset resolves to org.apache.spark.sql.classic.Dataset (see above)
-    jdf = spark._jvm.Dataset.ofRows(spark._jsparkSession, df._jdf.queryExecution().analyzed())
+    # by its dotted name, as in explain_formatted
+    dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+    jdf = dataset.ofRows(spark._jsparkSession, df._jdf.queryExecution().analyzed())
     return DataFrame(jdf, spark)
 
 

@@ -4,15 +4,48 @@ Local testing runs on ``local[N]``; the conf set here is chosen so the same
 code is correct on a large cluster: AQE on (runtime coalesce + skew joins),
 UTC session timezone (deterministic vs external oracles), Arrow enabled for
 the Pandas-UDF paths.
+
+It also resolves the py4j names that PySpark looks up on hot paths once per
+gateway (:func:`_pin_hot_names`). py4j resolves a dot-free name such as
+``jvm.PythonUtils`` by probing the name and then each of the gateway's star
+imports, and every miss is a ``Class.forName`` that scans the whole driver
+classpath: about 1 ms per lookup on 4 vCPUs, and 1.6 ms for each
+``is_instance_of`` check PySpark makes when it converts the error of a
+cancelled steering run.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaPackage, JVMView
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: dot-free names PySpark looks up on the JVMView per call, and their classes
+HOT_NAMES = {
+    "PythonUtils": "org.apache.spark.api.python.PythonUtils",
+    "functions": "org.apache.spark.sql.functions",
+}
+
+
+def _pin_hot_names(jvm: JVMView) -> None:
+    """Store the resolved py4j objects of :data:`HOT_NAMES` and of the
+    ``py4j.reflection.TypeUtil`` chain (walked by py4j's ``is_instance_of``)
+    as attributes of ``jvm``, so ``jvm.<name>`` is a Python attribute hit.
+    Each class is resolved by its dotted name, one lookup that hits; the two
+    packages are py4j handles that need no lookup. Runs once per JVMView,
+    that is once per gateway."""
+    if "py4j" in vars(jvm):
+        return
+    for name, fqn in HOT_NAMES.items():
+        setattr(jvm, name, getattr(jvm, fqn))
+    client = jvm._gateway_client
+    py4j = JavaPackage("py4j", client, jvm._id)
+    py4j.reflection = JavaPackage("py4j.reflection", client, jvm._id)
+    py4j.reflection.TypeUtil = getattr(jvm, "py4j.reflection.TypeUtil")
+    jvm.py4j = py4j
 
 
 def get_spark(
@@ -52,4 +85,5 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _pin_hot_names(spark._jvm)
     return spark

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -81,13 +81,11 @@ class SimState(CellExecutor):
     explored: np.ndarray
     spent: float = 0.0
     cells_explored: int = 0
-    #: per-row values already measured (one entry per distinct physical plan)
-    _revealed_values: dict[int, set[float]] = field(default_factory=dict)
 
     @classmethod
     def fresh(cls, wl: Workload) -> SimState:
         mask = wl.mask.astype(np.float64).copy()
-        state = cls(
+        return cls(
             wl=wl,
             mask=mask,
             matrix=np.where(mask > 0, wl.matrix, np.nan),
@@ -95,11 +93,6 @@ class SimState(CellExecutor):
             explored=mask.copy(),
             spent=0.0,
         )
-        # initially-observed cells are already-paid plans: their values seed
-        # the per-row equivalence sets
-        for i, j in np.argwhere(mask > 0):
-            state._revealed_values.setdefault(int(i), set()).add(wl.matrix[i, j])
-        return state
 
     def reveal_or_censor(self, i: int, j: int, tolerance: float) -> bool:
         """A30: pay min(true latency, tolerance); past tolerance we only learn
@@ -119,7 +112,9 @@ class SimState(CellExecutor):
         value-equality class (the limeqo.ipynb cells 4-5 variant): exact
         float equality only groups cells that are lookups of the same
         measured plan. The first reveal of a class pays its latency, a
-        timeout pays the tolerance once for the class."""
+        timeout pays the tolerance once for the class. A class is already
+        paid when any of its cells is observed: initially observed cells are
+        paid plans, and a reveal observes its whole class."""
         true = self.wl.matrix[i, j]
         cls = np.flatnonzero(self.wl.matrix[i] == true)
         self.explored[i, cls] = 1.0
@@ -128,10 +123,8 @@ class SimState(CellExecutor):
             self.spent += tolerance
             self.cutoffs[i, cls] = np.maximum(self.cutoffs[i, cls], tolerance)
             return False
-        seen = self._revealed_values.setdefault(i, set())
-        if true not in seen:
+        if not self.mask[i, cls].any():
             self.spent += true
-            seen.add(true)
         self.mask[i, cls] = 1.0
         self.matrix[i, cls] = true
         return True

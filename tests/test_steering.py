@@ -9,6 +9,7 @@ import uuid
 
 import pytest
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import functions as F
 
 from limeqo_spark import hints as H
@@ -101,6 +102,21 @@ def test_forbid_broadcast_changes_plan(spark):
     assert "BroadcastHashJoin" in default_plan
     assert "BroadcastHashJoin" not in forbidden_plan, "broadcast ban not honored"
     assert P.plan_hash(default_plan) != P.plan_hash(forbidden_plan)
+
+
+def test_applied_restores_confs_when_spark_rejects_a_value(spark):
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    bad = H.HintSet(
+        -1,
+        "rejected",
+        {keys[0]: "-1", keys[1]: "not-a-number"},  # the second is rejected
+    )
+    with pytest.raises(IllegalArgumentException, match="not-a-number"):
+        with H.applied(spark, bad):
+            pass
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    assert H.active_join_hint() is None
 
 
 def test_canonicalize_strips_session_noise():
