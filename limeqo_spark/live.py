@@ -4,10 +4,10 @@ This is the end-to-end slice (SURVEY §7): a set of queries x the HintSet
 registry, explored by the simulator's loop (``strategies.Strategy.run``)
 with the session as its cell executor, where "executing a cell" launches
 the hinted query on the cluster with a wall-clock budget
-(steer.run_steered) instead of a matrix lookup. Each query is built and
-planned once per session (steer.hint_plans); a cell's run executes that
-frame, and its measured latency is shared by every HintSet with the same
-physical plan.
+(steer.run_steered) instead of a matrix lookup. Each query is built once
+per join hint and planned once per HintSet (steer.hint_plans); a cell's
+first run executes the physical plan that pass made, and its measured
+latency is shared by every HintSet with the same physical plan.
 
 State lives in a long-form observations table (Parquet-persistable via
 ``to_long_df``); the tiny Q x H mirror drives the models on the driver.
@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
-from limeqo_spark.plans import NODE_VOCABULARY, parse_formatted_tree, plan_hash
+from limeqo_spark.plans import NODE_VOCABULARY, parse_formatted_tree, plan_hash, replanned
 from limeqo_spark.steer import hint_plans, run_steered
 from limeqo_spark.strategies import CellExecutor, LimeQOStrategy
 from limeqo_spark.tcnn import collate_trees, flatten_tree
@@ -66,7 +66,8 @@ class LiveSteeringSession(CellExecutor):
         #: exploration time charged by reveal_or_censor (bootstrap is free)
         self.spent = 0.0
         self.cells_explored = 0
-        self._frames: dict[int, dict[str | None, DataFrame]] = {}
+        self._built: dict[int, dict[str | None, DataFrame]] = {}
+        self._planned: dict[tuple[int, int], DataFrame] = {}
         self._plan_hashes: dict[tuple[int, int], str] = {}
         self._plan_texts: dict[tuple[int, int], str] = {}
 
@@ -77,24 +78,36 @@ class LiveSteeringSession(CellExecutor):
 
     def _fingerprints(self, qi: int) -> dict[int, str]:
         """Plan hash per hint for one query (planning only, one build per
-        join hint: steer.hint_plans). The built frames are kept for the
-        cell runs and each cell's EXPLAIN text for :meth:`trees`, so a cell
-        is built and planned once per session."""
-        if qi not in self._frames:
+        join hint: steer.hint_plans). The built frames are kept, each
+        unexplored cell's planned frame for its run and each cell's EXPLAIN
+        text for :meth:`trees`, so a cell is built and planned once per
+        session unless it runs again."""
+        if qi not in self._built:
             build = self.queries[self.query_ids[qi]]
-            self._frames[qi], texts = hint_plans(self.spark, build, self.hint_sets)
-            for hj, text in enumerate(texts):
+            self._built[qi], planned, texts = hint_plans(self.spark, build, self.hint_sets)
+            for hj, (df, text) in enumerate(zip(planned, texts)):
+                if self.explored[qi, hj] == 0:
+                    self._planned[(qi, hj)] = df
                 self._plan_texts[(qi, hj)] = text
                 self._plan_hashes[(qi, hj)] = plan_hash(text)
         return {hj: self._plan_hashes[(qi, hj)] for hj in range(len(self.hint_sets))}
 
     def frame(self, qi: int, hj: int) -> DataFrame:
-        """The frame the fingerprint pass built for this cell's join hint."""
+        """This cell's frame to run. The first call on an unexplored cell
+        returns the frame the fingerprint pass planned; any other call a
+        fresh copy of the built frame (``plans.replanned``), planned under
+        the confs in effect when it is run or planned. A QueryExecution is
+        executed at most once (steer.run_steered), and the session keeps
+        planned frames for unexplored cells only."""
         self._fingerprints(qi)
-        return self._frames[qi][self.hint_sets[hj].join_hint]
+        planned = self._planned.pop((qi, hj), None)
+        if planned is not None:
+            return planned
+        return replanned(self._built[qi][self.hint_sets[hj].join_hint])
 
     def _record(self, qi: int, hj: int, latency: float | None, cutoff: float | None, fp: str, measured: bool) -> None:
         self.explored[qi, hj] = 1
+        self._planned.pop((qi, hj), None)  # the loop runs an explored cell no more: free its plan
         if latency is not None:
             self.matrix[qi, hj] = latency
         elif cutoff is not None:
@@ -106,10 +119,9 @@ class LiveSteeringSession(CellExecutor):
     def execute_cell(self, qi: int, hj: int, timeout_s: float | None) -> None:
         """Run one (query, hint) cell live; fan the result out to every
         plan-equivalent hint of that query (A15/A18: pay each plan once)."""
-        df = self.frame(qi, hj)
         runs = []
         for _ in range(max(1, self.repeats)):
-            runs.append(run_steered(self.spark, df, self.hint_sets[hj], timeout_s))
+            runs.append(run_steered(self.spark, self.frame(qi, hj), self.hint_sets[hj], timeout_s))
             if runs[-1].latency is None:  # censored: don't pay the budget again
                 break
         run = runs[-1]

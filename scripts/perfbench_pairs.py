@@ -2,15 +2,16 @@
 """Compare the working tree with a parent commit on one perfbench workload.
 
     python3 scripts/perfbench_pairs.py --workload steer_live --seeds 31-40 \
-        [--parent HEAD] [--seconds 12] [--json runs.json]
+        [--parent HEAD] [--seconds 12] [--trace 0|1] [--json runs.json]
 
 The parent is exported with ``git archive`` into a temporary directory,
 and the working tree's files (tracked and untracked, less what .gitignore
 lists) are copied next to it, so both sides run from a fresh directory with
 no earlier run state. Each seed is one pair: ``python3 perfbench/run.py
---workload W --seed N --seconds S`` runs once in each copy, one after the
-other, and the side that runs first alternates from pair to pair. Each
-run's last stdout line is its JSON result.
+--workload W --seed N --seconds S --trace T`` runs once in each copy, one
+after the other, and the side that runs first alternates from pair to pair.
+Each run's last stdout line is its JSON result: the end-to-end metrics with
+``--trace 0`` (the default), the per-layer metrics with ``--trace 1``.
 
 For every metric it prints each side's median and quartiles, the parent's
 spread (upper minus lower quartile), and how many pairs the change won.
@@ -70,11 +71,11 @@ def copy_worktree(dest: str) -> None:
             shutil.copy2(src, os.path.join(dest, rel))
 
 
-def run_once(root: str, workload: str, seed: int, seconds: float) -> dict | None:
+def run_once(root: str, workload: str, seed: int, seconds: float, trace: int = 0) -> dict | None:
     """One benchmark run in the checkout at ``root``: its JSON result, or
     None when it printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", f"{seconds:g}"]
+           "--seed", str(seed), "--seconds", f"{seconds:g}", "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
@@ -132,6 +133,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seeds", required=True, type=parse_seeds, help="e.g. 31-40 or 1,3,5")
     ap.add_argument("--parent", default="HEAD", help="commit to compare against (default HEAD)")
     ap.add_argument("--seconds", type=float, default=12.0)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1 compares the per-layer metrics of traced runs")
     ap.add_argument("--json", help="also write every pair's results to this file")
     args = ap.parse_args(argv)
 
@@ -144,13 +147,14 @@ def main(argv: list[str] | None = None) -> int:
             order = SIDES if i % 2 == 0 else SIDES[::-1]
             pair = {"seed": seed, "first": order[0]}
             for side in order:
-                pair[side] = run_once(roots[side], args.workload, seed, args.seconds)
+                pair[side] = run_once(roots[side], args.workload, seed, args.seconds, args.trace)
             runs.append(pair)
             print(f"seed {seed} done ({order[0]} first)", file=sys.stderr, flush=True)
     if args.json:
         with open(args.json, "w") as f:
             json.dump(runs, f, indent=1)
-    print(f"{args.workload}: parent {args.parent} vs working tree, --seconds {args.seconds:g}")
+    print(f"{args.workload}: parent {args.parent} vs working tree, "
+          f"--seconds {args.seconds:g} --trace {args.trace}")
     print("\n".join(summarize(runs)))
     return 0
 

@@ -46,7 +46,7 @@ class FakeSpark:
     def hint_plans(self, spark, build, hint_sets):
         qi = build()
         texts = [f"Plan q{qi} latency {self.m[qi, hs.hint_id]!r}" for hs in hint_sets]
-        return {hs.join_hint: qi for hs in hint_sets}, texts
+        return {hs.join_hint: qi for hs in hint_sets}, [qi for _ in hint_sets], texts
 
     def run_steered(self, spark, qi, hint_set, timeout_s=None):
         self.runs.append((qi, hint_set.hint_id, timeout_s))

@@ -50,16 +50,16 @@ def test_is_instance_of_makes_no_probing_lookup(spark, probing_lookups):
 def test_fingerprint_pass_makes_no_probing_lookup(spark, sf_dir, probing_lookups):
     build = steering_workload(spark, sf_dir)["star_5way"]
     hint_sets = [H.REGISTRY[0], H.REGISTRY[17], H.REGISTRY[48]]
-    _, texts = hint_plans(spark, build, hint_sets)
+    _, _, texts = hint_plans(spark, build, hint_sets)
     assert len(texts) == 3
     assert probing_lookups == []
 
 
 def test_censored_run_makes_no_probing_lookup(spark, sf_dir, probing_lookups):
     hs = H.REGISTRY[0]
-    frames, _ = hint_plans(spark, steering_workload(spark, sf_dir)["star_5way"], [hs])
+    _, planned, _ = hint_plans(spark, steering_workload(spark, sf_dir)["star_5way"], [hs])
     probing_lookups.clear()
-    run = run_steered(spark, frames[hs.join_hint], hs, timeout_s=0.001)
+    run = run_steered(spark, planned[0], hs, timeout_s=0.001)
     assert run.latency is None
     assert probing_lookups == []
 

@@ -7,6 +7,7 @@ import threading
 import time
 import uuid
 
+import numpy as np
 import pytest
 
 from pyspark.errors import IllegalArgumentException
@@ -178,10 +179,10 @@ def test_censored_run_completes_no_job(spark, sf_dir, hint_id):
     own nor a shuffle map-stage job AQE submitted after the cancel, runs
     to success."""
     hs = H.REGISTRY[hint_id]
-    frames, _ = hint_plans(spark, steering_workload(spark, sf_dir)["star_5way"], [hs])
+    _, planned, _ = hint_plans(spark, steering_workload(spark, sf_dir)["star_5way"], [hs])
     sc = spark.sparkContext
     lo = _marker_job(sc)
-    run = run_steered(spark, frames[hs.join_hint], hs, timeout_s=0.001)
+    run = run_steered(spark, planned[0], hs, timeout_s=0.001)
     hi = _marker_job(sc)
     assert run.latency is None and run.censor_cutoff == pytest.approx(0.001)
 
@@ -196,21 +197,84 @@ def test_censored_run_completes_no_job(spark, sf_dir, hint_id):
     assert not succeeded, f"censored hint {hint_id} run completed jobs {succeeded}"
 
 
+def test_steered_run_does_not_plan_again(spark):
+    """A run executes the physical plan the fingerprint pass made: no rule
+    of the main optimizer runs inside it (AQE's own rules may)."""
+    hs = H.REGISTRY[0]
+    _, planned, _ = hint_plans(spark, steering_workload(spark, SF)["star_5way"], [hs])
+    rules = getattr(spark._jvm, "org.apache.spark.sql.catalyst.rules.RuleExecutor")
+    rules.resetMetrics()
+    run = run_steered(spark, planned[0], hs)
+    assert run.latency is not None
+    ran = rules.dumpTimeSpent()
+    for rule in ("ColumnPruning", "PushDownPredicates", "ReorderJoin"):
+        assert rule not in ran, f"the run ran optimizer rule {rule}"
+
+
+def _stages_run(sc, lo: int, hi: int) -> int:
+    """Stages that completed a task, over the jobs between two marker
+    jobs (a stage shared by several jobs counts once)."""
+    tracker = sc.statusTracker()
+    infos = [tracker.getJobInfo(j) for j in range(lo + 1, hi)]
+    stages = {sid for info in infos if info is not None for sid in info.stageIds}
+    completed = [tracker.getStageInfo(sid) for sid in stages]
+    return sum(si is not None and si.numCompletedTasks > 0 for si in completed)
+
+
+def test_a_cell_run_again_executes_a_fresh_plan(spark, monkeypatch):
+    """A QueryExecution runs at most once: AQE would skip the map stages of
+    a plan it has run, and keeps a cancelled stage's failure. So a cell's
+    second run (repeats=2) completes as many stages as its first, and a
+    censored cell's frame still collects the query's rows."""
+    import limeqo_spark.live as live_mod
+
+    sc = spark.sparkContext
+    bounds = []
+
+    def bracketed(*args, **kwargs):
+        lo = _marker_job(sc)
+        run = run_steered(*args, **kwargs)
+        bounds.append((lo, _marker_job(sc)))
+        return run
+
+    monkeypatch.setattr(live_mod, "run_steered", bracketed)
+    build = join_query(spark)
+    merge = H.REGISTRY[17]  # a sort-merge join: both sides are shuffled
+    assert merge.join_hint == "MERGE"
+    s = LiveSteeringSession(spark, {"q": build}, hint_sets=[merge], warmup=False, repeats=2)
+    s.execute_cell(0, 0, None)
+    assert len(bounds) == 2 and s.matrix[0, 0] > 0
+    first, second = (_stages_run(sc, lo, hi) for lo, hi in bounds)
+    assert first >= 3, f"expected a shuffle join, ran {first} stages"
+    assert second == first, f"the second run ran {second} stages, the first {first}"
+
+    baseline = {tuple(r) for r in build().collect()}
+    censored = LiveSteeringSession(spark, {"q": build}, hint_sets=[merge], warmup=False)
+    censored.execute_cell(0, 0, 0.001)
+    assert np.isnan(censored.matrix[0, 0]) and censored.cutoffs[0, 0] == pytest.approx(0.001)
+    with H.applied(spark, merge):
+        got = {tuple(r) for r in censored.frame(0, 0).collect()}
+    assert got == baseline
+
+
 def test_run_steered_raises_when_the_run_outlives_its_cancel(spark, monkeypatch):
     release = threading.Event()
 
     class Blocking:
-        """Stands in for a frame whose write ignores the cancel."""
+        """Stands in for a frame whose plan's execution ignores the cancel."""
 
-        write = property(lambda self: self)
+        _jdf = property(lambda self: self)
 
-        def format(self, _name):
+        def queryExecution(self):
             return self
 
-        def mode(self, _mode):
+        def executedPlan(self):
             return self
 
-        def save(self):
+        def toRdd(self):
+            return self
+
+        def count(self):
             release.wait()
 
     monkeypatch.setattr(steer, "_CANCEL_WAIT_S", 0.2)
