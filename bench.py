@@ -3,15 +3,19 @@
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the simulation-mode
 LimeQO run on the reference JOB matrix (BASELINE.md track 1).
 
-Each run appends its full record to ``docs/bench/<round>-cpus<N>-<sf>.jsonl``
-and prints ONE compact JSON line naming that file and line. Compare runs
-with :func:`clean_runs` over one such file.
+Each query runs one cold rep and :data:`WARM_REPS` warm reps, each through
+:func:`limeqo_spark.profile.measure`; the headline is the sum over queries
+of the median warm wall. Each run appends its full record, with every rep's
+profile (counters, executor CPU seconds, task p50/max), to
+``docs/bench/<round>-cpus<N>-<sf>.jsonl`` and prints ONE compact JSON line
+naming that file and line.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -20,28 +24,15 @@ from datetime import datetime, timezone
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-#: CPU-calibration reference (VERDICT r5 next-round #4): wall seconds of
-#: the fixed-work token below, measured on THIS box while idle (round 6,
-#: load1 ~0.3). The r5 bench's ~2x query-wall inflation was machine
-#: contention, not code (the byte-identical pure-numpy sim slowed 4.2x in
-#: the same run); the token makes that condition measurable so a contended
-#: artifact annotates itself instead of reading as a regression.
-#: overridable (ADVICE r6): the constant is calibrated for THIS box and its
-#: BLAS build — on any other machine set SPARK_GRAFT_CAL_REF_S to an idle
-#: best-of-3 token reading, or treat ``contended`` as meaningless; the
-#: calibration block records the BLAS/thread context for recalibration.
-CAL_REF_S = float(os.environ.get("SPARK_GRAFT_CAL_REF_S", "0.033"))
-#: drift ratio above which the headline is flagged contended
-CAL_CONTENDED_RATIO = 1.3
-#: per-rep token drift above which a SINGLE rep is marked hot and retried
-#: (VERDICT r7 #4: the r7 driver artifact ran at cal 5.36 with reps like
-#: [4.4, 47.3, 61.6] s — start/end tokens alone can't stop a mid-run spike
-#: from minting a plausible-looking regression)
-REP_HOT_RATIO = 1.5
-#: attempt ceiling per query when hot reps force retries (3 normal + 3 spare)
-MAX_ATTEMPTS = 6
 #: round tag, the first part of a run's record key (round, cpus, sf)
-ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND", "r12")
+ROUND_TAG = os.environ.get("SPARK_GRAFT_ROUND", "r13")
+#: reps per query: one cold rep, then the warm reps its median is taken over
+WARM_REPS = 3
+#: profile fields a neighbour cannot move, compared across a query's warm
+#: reps. Shuffle bytes are compressed sizes: rows that reach a shuffle in a
+#: different order change them slightly while the records agree
+STEADY_COUNTERS = ("rows", "jobs", "shuffle_write_records", "shuffle_read_bytes",
+                   "shuffle_write_bytes")
 DOCS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "docs")
 
 
@@ -69,25 +60,14 @@ def append_run(docs_dir: str, record: dict) -> tuple[str, int]:
         return path, sum(block.count(b"\n") for block in iter(lambda: f.read(1 << 16), b""))
 
 
-def clean_runs(path: str) -> list[dict]:
-    """The records of one key whose own calibration says uncontended, in
-    append order. A filter only: which run to compare is the caller's call."""
-    with open(path) as f:
-        runs = [json.loads(line) for line in f if line.strip()]
-    return [r for r in runs if r.get("calibration", {}).get("contended") is False]
-
-
 def compact_line(record: dict, path: str, line_no: int) -> dict:
-    """The printed summary of a run: the headline, its contention, the
-    per-query medians, the sim scalars or the sim error, and the file and
-    line holding the full record (stdout readers may keep only a tail)."""
-    cal = record["calibration"]
-    line = {k: record[k] for k in ("metric", "value", "unit")}
+    """The printed summary of a run: the headline, the load average around
+    it, the counters each query's warm reps disagree on, the per-query
+    medians, the sim scalars or the sim error, and the file and line holding
+    the full record (stdout readers may keep only a tail)."""
+    line = {k: record[k] for k in ("metric", "value", "unit", "loadavg_start", "loadavg_end",
+                                   "counters_differ")}
     line.update(
-        cal_ratio=cal["cal_ratio"],
-        contended=cal["contended"],
-        queries_with_hot_reps=cal["queries_with_hot_reps"],
-        queries_contended=cal["queries_contended"],
         queries={k: v for k, v in record["queries"].items() if not k.startswith("sim_")},
         sf=record["sf"],
         record=path,
@@ -97,26 +77,6 @@ def compact_line(record: dict, path: str, line_no: int) -> dict:
     line.update({k: v for k, v in record.items() if k.startswith("sim_") and isinstance(v, (int, float))})
     return line
 
-
-def cpu_calibration_token(reps: int = 3) -> float:
-    """Fixed-work CPU token: best-of-``reps`` wall time of 40 seeded
-    512x512 matmuls. Tracks per-core throughput under whatever load the
-    box is carrying; compared against :data:`CAL_REF_S`."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    a = rng.standard_normal((512, 512))
-    b = rng.standard_normal((512, 512))
-    a @ b  # BLAS thread-pool warm-up: a cold process's first matmul reads
-    # ~1.5x slow and would false-flag 'contended' at run start
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        acc = a
-        for _ in range(40):
-            acc = a @ b
-        best = min(best, time.perf_counter() - t0)
-    return best
 
 #: headline subset: one per operator family, heaviest variants
 HEADLINE = [
@@ -168,141 +128,40 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> int:
-    """Fully execute the plan without driver collection (noop sink)."""
-    df.write.format("noop").mode("overwrite").save()
-    return 0
-
-
 def main() -> None:
     from limeqo_spark.manifest import REGISTRY
+    from limeqo_spark.profile import measure
     from limeqo_spark.session import get_spark
 
-    # machine-contention calibration BEFORE any Spark work (r5's bench wall
-    # numbers were ~2x inflated by noisy neighbors; see CAL_REF_S)
     load_start = os.getloadavg()
-    cal_start = cpu_calibration_token()
-    # per-RUN contention floor (VERDICT r9 #4, implemented as self-measured
-    # recalibration): this host class idles at ~2x CAL_REF_S, so an
-    # ABSOLUTE rep-hot bar (CAL_REF_S * 1.5) branded every rep of every
-    # query hot — 43/43 queries in queries_contended and 6 attempts
-    # burned per query on a box that was steady, just slower than the
-    # r1-era reference. Rep-hot now means "hot relative to THIS run's
-    # pre-Spark idle token"; the cap at 4x keeps a genuinely-contended
-    # launch (cal_start 10-35x) from laundering mid-run spikes as clean.
-    # Cross-host cal_ratio/contended stay on CAL_REF_S for continuity.
-    session_floor = min(max(CAL_REF_S, cal_start), 4 * CAL_REF_S)
-
     spark = get_spark("limeqo_bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     # warm the JVM/codegen path so per-query times measure the queries
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     timings: dict[str, float] = {}
-    first_runs: dict[str, float] = {}
     raw_reps: dict[str, list[float]] = {}
-    query_contention: dict[str, dict] = {}
-    session_rep_tokens: list[float] = []
+    profiles: dict[str, list[dict]] = {}
+    counters_differ: dict[str, list[str]] = {}
     for name in HEADLINE:
         spec = REGISTRY.get(name)
         if spec is None:
             continue
-        # MEDIAN of 3 runs for EVERY query (round-7 change, VERDICT r6
-        # next-round #5: at 0.2-3 s per query the round-over-round min-of-2
-        # deltas scattered +-30%, hiding real regressions). The first run
-        # pays one-time costs (codegen compile, ingest-time materialization
-        # for the bucketed/partitioned variants) and is recorded separately;
-        # the median of the three is robust to both the cold first rep and
-        # a noisy-neighbor spike in any single rep. All raw reps ship in
-        # the full payload so nothing is taken on faith.
-        #
-        # Per-rep contention guard (VERDICT r7 #4): a quick calibration
-        # token runs before every rep; a rep whose token drifts past
-        # REP_HOT_RATIO is kept in the raw payload but EXCLUDED from the
-        # median, and the query earns extra attempts (up to MAX_ATTEMPTS)
-        # to collect 3 clean reps. A query that never collects a clean rep
-        # reports the all-rep median and lands in queries_contended — so a
-        # contended box annotates itself per-query instead of minting a
-        # plausible-looking regression.
-        reps: list[float] = []
-        rep_hot: list[bool] = []
-        rep_tokens: list[float] = []
-        while len(reps) < MAX_ATTEMPTS:
-            tok = cpu_calibration_token(reps=1)
-            t0 = time.perf_counter()
-            materialize(spec.builder(spark, SF_DIR))
-            elapsed = time.perf_counter() - t0
-            if not reps:
-                first_runs[name] = round(elapsed, 3)
-            reps.append(elapsed)
-            rep_tokens.append(tok)
-            session_rep_tokens.append(tok)
-            rep_hot.append(tok > session_floor * REP_HOT_RATIO)
+        # rep 0 pays one-time costs (codegen compile, schema reads,
+        # ingest-time materialization for the bucketed/partitioned
+        # variants) and stays out of the median
+        runs = []
+        for _ in range(1 + WARM_REPS):
+            runs.append(measure(spark, lambda: spec.builder(spark, SF_DIR)))
             # each query is measured standalone: drop caches a query pinned
             # (the dedup suite caches shingle/signature relations) so later
             # queries aren't squeezed by leftover storage memory
             spark.catalog.clearCache()
-            # 3 clean WARM reps (cold rep 0 is median-excluded below, so
-            # counting it here would leave a 2-element pool)
-            if len(reps) >= 3 and sum(
-                1 for i, h in enumerate(rep_hot) if not h and i > 0
-            ) >= 3:
-                break
-            # sustained severe contention: if 4 attempts produced zero clean
-            # reps, more retries just double the wall on a hopeless box —
-            # accept the all-hot median (the query lands in
-            # queries_contended either way)
-            if len(reps) >= 4 and not any(not h for h in rep_hot):
-                break
-        clean_idx = [i for i, h in enumerate(rep_hot) if not h]
-        # the FIRST rep pays one-time costs (codegen compile, ingest-time
-        # materialization) and is recorded separately in queries_first_run
-        # — keep it out of the median whenever warm reps exist (r10: with
-        # the retry loop often stopping at exactly 3 clean reps, the cold
-        # rep was landing in — and for 2-element evens, BECOMING — the
-        # median; q05 read 2.42 s when its steady state measured 1.36 s)
-        if len(clean_idx) >= 2 and clean_idx[0] == 0:
-            clean_idx = clean_idx[1:]
-        # when the ONLY clean rep is the cold rep 0 (ADVICE r11): the cold
-        # materialization run must never stand in for steady-state timing —
-        # it reported q17 at 0.788 s vs a 0.275 s warm median. Fall back to
-        # the all-rep WARM median (hot, but warm) and say so.
-        median_over = "clean"
-        if clean_idx == [0] and len(reps) > 1:
-            clean_idx = []
-            used = reps[1:]
-            median_over = "warm_reps_hot_cold_only_clean"
-        else:
-            used = [reps[i] for i in clean_idx] if clean_idx else reps
-        clean = [reps[i] for i in clean_idx]
-        raw_reps[name] = [round(r, 3) for r in reps]
-        # hot vs the ABSOLUTE reference constant, recorded alongside the
-        # session-floor-relative flag (ADVICE r10): on a uniformly slow
-        # launch the floor-relative count reads zero while every rep ran
-        # slower than the reference bar — a judge needs both to tell
-        # "clean on this host" from "clean vs reference"
-        hot_vs_ref = sum(1 for t in rep_tokens if t > CAL_REF_S * REP_HOT_RATIO)
-        if any(rep_hot):
-            query_contention[name] = {
-                "rep_tokens": [round(t, 4) for t in rep_tokens],
-                "hot_reps": sum(rep_hot),
-                "hot_reps_vs_ref": hot_vs_ref,
-                "clean_reps": len(clean),
-                "median_over": (
-                    median_over
-                    if clean or median_over != "clean"
-                    else "all_reps_hot"
-                ),
-            }
-        # median policy (r11, ADVICE r10): odd pools take the true median;
-        # EVEN pools take the MEAN of the two central reps — the r10
-        # lower-middle pick biased even pools toward the faster rep
-        # exactly as symmetrically as the upper-middle pick it replaced
-        # biased them toward the slower one
-        s = sorted(used)
-        if len(s) % 2:
-            timings[name] = round(s[len(s) // 2], 3)
-        else:
-            timings[name] = round((s[len(s) // 2 - 1] + s[len(s) // 2]) / 2.0, 3)
+        profiles[name] = runs
+        raw_reps[name] = [round(r["wall_s"], 3) for r in runs]
+        timings[name] = round(statistics.median(r["wall_s"] for r in runs[1:]), 3)
+        differ = [k for k in STEADY_COUNTERS if len({r[k] for r in runs[1:]}) > 1]
+        if differ:
+            counters_differ[name] = differ
 
     # simulation-mode track (BASELINE.md track 1): LimeQO on the reference's
     # own matrices at its published exploration-budget checkpoints.
@@ -340,7 +199,7 @@ def main() -> None:
         from limeqo_spark.strategies import LimeQOPlusStrategy
 
         t0 = time.perf_counter()
-        # no k override: LimeQO+ uses the reference's k=32 batches
+        # no k override: LimeQO+ uses its default k=16 batches
         rec = LimeQOPlusStrategy(wl, seed=1, max_rounds=500, time_budget=90.0).run()
         timings["sim_job_limeqo_plus"] = round(time.perf_counter() - t0, 3)
         sim["sim_job_limeqo_plus_final_latency"] = round(
@@ -453,86 +312,27 @@ def main() -> None:
     # own; legacy_total_wall keeps the older queries + sim sum.
     total = round(sum(v for k, v in timings.items() if not k.startswith("sim_")), 3)
     sim_total = round(sum(v for k, v in timings.items() if k.startswith("sim_")), 3)
-    # close-out calibration: the worst of the start/end tokens decides the
-    # contended flag (contention arriving mid-run still shows up)
-    cal_end = cpu_calibration_token()
-    cal_ratio = round(max(cal_start, cal_end) / CAL_REF_S, 3)
-    # BLAS/thread context so cal_ref_s can be recalibrated off this box
-    # (ADVICE r6: the constant is machine- and BLAS-build-specific)
-    import numpy as _np
-
-    try:
-        _blas = _np.show_config(mode="dicts")["Build Dependencies"]["blas"]["name"]
-    except Exception:
-        _blas = "unknown"
-    # a query whose every rep ran hot could not be measured cleanly — its
-    # number is untrustworthy and the headline says so
-    unmeasurable = sorted(
-        n for n, c in query_contention.items() if c["median_over"] == "all_reps_hot"
-    )
-    # the conditions the queries ACTUALLY ran under: median of every
-    # per-rep token taken immediately before each measured rep — a better
-    # normalization basis than max(start, end), which conflates the sim
-    # track's self-inflicted tail heat with ambient contention
-    all_rep_tokens = sorted(session_rep_tokens) or [max(cal_start, cal_end)]
-    cal_median_rep = all_rep_tokens[len(all_rep_tokens) // 2]
-    median_rep_ratio = round(cal_median_rep / CAL_REF_S, 3)
-    calibration = {
-        "cal_token_start_s": round(cal_start, 4),
-        "cal_token_end_s": round(cal_end, 4),
-        "session_floor_s": round(session_floor, 4),
-        "cal_token_median_rep_s": round(cal_median_rep, 4),
-        "median_rep_ratio": median_rep_ratio,
-        "cal_ref_s": CAL_REF_S,
-        "cal_ref_overridden": "SPARK_GRAFT_CAL_REF_S" in os.environ,
-        "cal_ratio": cal_ratio,
-        "loadavg_start": [round(x, 2) for x in load_start],
-        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-        "contended": cal_ratio > CAL_CONTENDED_RATIO or bool(unmeasurable),
-        "queries_with_hot_reps": len(query_contention),
-        # both bars at session level (ADVICE r10): floor-relative = hot on
-        # THIS host's launch baseline; ref-relative = hot vs the absolute
-        # reference constant. A uniformly slow box shows 0 floor-hot reps
-        # but every rep ref-hot — the pair disambiguates.
-        "session_reps_hot_vs_floor": sum(
-            1 for t in session_rep_tokens if t > session_floor * REP_HOT_RATIO
-        ),
-        "session_reps_hot_vs_ref": sum(
-            1 for t in session_rep_tokens if t > CAL_REF_S * REP_HOT_RATIO
-        ),
-        "session_reps_total": len(session_rep_tokens),
-        "median_policy": (
-            "per-query median of clean warm reps; even pools average the "
-            "two central reps (r11 — r10 used lower-middle, r9 upper-middle)"
-        ),
-        "queries_contended": unmeasurable,
-        "per_query_contention": query_contention,
-        "blas": _blas,
-        "omp_num_threads": os.environ.get("OMP_NUM_THREADS"),
-        "cpu_count": os.cpu_count(),
-    }
     full = {
         "metric": "headline_query_wall",
         "value": total,
         "unit": "sec",
         "sim_overhead_total": sim_total,
         "legacy_total_wall": round(total + sim_total, 3),
-        "timing": "per-query median-of-3 (was min-of-2 through r6)",
+        "timing": (
+            f"per-query median of {WARM_REPS} warm reps after 1 cold rep, each a "
+            "profile.measure run (build + plan + execute, no write); through r12 "
+            "a median of calibration-token-clean reps of a noop write"
+        ),
         "queries": timings,
-        "queries_first_run": first_runs,
         "queries_raw_reps": raw_reps,
-        "calibration": calibration,
+        "queries_profile": profiles,
+        "counters_differ": counters_differ,
+        "loadavg_start": [round(x, 2) for x in load_start],
+        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "sf": SF_DIR,
         "cpus": CPUS,
         "round": ROUND_TAG,
     }
-    # host-normalized headline: wall / median per-rep token ratio, a
-    # cross-host series for steady host-class slowness. The denominator is
-    # clamped at 1.0, and past a ratio of 4 (a contention spike, not a slow
-    # host) the linear correction is meaningless, so the field is null.
-    norm = round(total / max(median_rep_ratio, 1.0), 3) if median_rep_ratio <= 4.0 else None
-    full["headline_host_normalized_s"] = norm
-    full["headline_host_normalized_basis"] = "median_rep_ratio"
     full.update(sim)
     full["sim_error"] = sim_error
     if sim:

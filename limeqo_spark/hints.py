@@ -23,7 +23,7 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 #: the join-strategy hint of the currently-applied HintSet. Spark only honors
 #: a join hint placed on a relation that participates in a join (a hint above
@@ -43,13 +43,6 @@ class HintSet:
     name: str
     confs: dict[str, str] = field(default_factory=dict)
     join_hint: str | None = None  # BROADCAST | MERGE | SHUFFLE_HASH | SHUFFLE_REPLICATE_NL
-
-    def apply_join_hint(self, df: DataFrame) -> DataFrame:
-        """Tag a *relation* (something that will be joined) with this set's
-        join-strategy hint. Useless on a final aggregated result — prefer
-        building the query under :func:`applied`, which makes io.table()
-        tag every base relation automatically."""
-        return df.hint(self.join_hint) if self.join_hint else df
 
 
 def build_registry() -> list[HintSet]:

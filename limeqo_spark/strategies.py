@@ -22,7 +22,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from limeqo_spark.complete import als_complete
+from limeqo_spark.complete import complete_log_space
 from limeqo_spark.workload import Workload
 
 ALPHA = 1.0  # timeout tolerance: alpha * best observed latency of the query
@@ -440,15 +440,14 @@ class LimeQOStrategy(Strategy):
 
     def _fit_als(self) -> None:
         st = self.state
-        log_m = np.log1p(np.where(st.mask > 0, st.matrix, 0.0))
-        log_cut = np.log1p(st.cutoffs) if self.use_censored else None
-        preds = []
-        for _ in range(self.n_restarts):
-            done = als_complete(
-                log_m, st.mask, self.rank, self.iters, self.lam,
-                seed=int(self.rng.integers(2**31)), nonnegative=True, cutoffs=log_cut,
-            )
-            preds.append(np.expm1(done))
+        cutoffs = st.cutoffs if self.use_censored else None
+        preds = [
+            complete_log_space(
+                st.matrix, st.mask, cutoffs, self.rank, self.iters, self.lam,
+                seed=int(self.rng.integers(2**31)),
+            ).completed
+            for _ in range(self.n_restarts)
+        ]
         self.pred = np.mean(preds, axis=0)
 
     def _fit_plan(self) -> None:
@@ -709,11 +708,10 @@ class BaoStrategy(Strategy):
             raise ValueError("BaoStrategy requires a time_budget")
 
     def _fit(self, obs_mask: np.ndarray, obs_m: np.ndarray) -> np.ndarray:
-        done = als_complete(
-            np.log1p(obs_m), obs_mask, self.rank, self.iters, self.lam,
-            seed=int(self.rng.integers(2**31)), nonnegative=True,
-        )
-        return np.expm1(done)
+        return complete_log_space(
+            obs_m, obs_mask, None, self.rank, self.iters, self.lam,
+            seed=int(self.rng.integers(2**31)),
+        ).completed
 
     def run(self, output_path: str | None = None) -> list[dict]:
         wl = self.wl

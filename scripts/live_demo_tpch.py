@@ -37,12 +37,11 @@ QUERIES = [
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "docs/live_demo_tpch_r6.json"
-    from bench import CAL_REF_S, cpu_calibration_token
     from limeqo_spark.live import LiveSteeringSession
     from limeqo_spark.manifest import REGISTRY
     from limeqo_spark.session import get_spark
 
-    cal_start = cpu_calibration_token()
+    load_start = os.getloadavg()
     spark = get_spark("live_demo_tpch")
     queries = {
         name: (lambda n=name: REGISTRY[n].builder(spark, SF_DIR)) for name in QUERIES
@@ -90,18 +89,13 @@ def main() -> None:
             "confirmed_non_overlapping": max(s_runs) < min(d_runs),
         }
 
-    cal_end = cpu_calibration_token()
     report = {
         "sf_dir": SF_DIR,
         "model": "tcnn",
         "explore": {"rounds": 12, "k": 8, "repeats": 3, "hint_sets": len(sess.hint_sets)},
         "session_wall_s": round(wall, 1),
-        "calibration": {
-            "cal_token_start_s": round(cal_start, 4),
-            "cal_token_end_s": round(cal_end, 4),
-            "cal_ref_s": CAL_REF_S,
-            "contended": max(cal_start, cal_end) / CAL_REF_S > 1.3,
-        },
+        "loadavg_start": [round(x, 2) for x in load_start],
+        "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "confirmation": confirm,
         "queries": {
             qid: {

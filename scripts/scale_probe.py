@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Scale probe: replicate the sf0.1 fixtures N-fold (key-offset so join
 cardinalities scale linearly, not quadratically) into /tmp, then measure a
-set of heavy operators at 1x and Nx and report the wall-time scaling ratio.
+set of heavy operators at 1x and Nx and report the wall-time scaling ratio,
+next to each run's profile record (executor CPU seconds, shuffle bytes, task
+p50/max; see limeqo_spark/profile.py).
 
 An operator whose plan is scale-sane grows ~linearly (ratio ~= N on a fixed
 local core budget); a quadratic candidate-pair blowup or a hot-key stall
@@ -30,7 +32,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -236,14 +237,14 @@ def simhash_planted_recall(spark, sf_dir: str, n: int) -> dict:
     }
 
 
-def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, float]:
+def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
+    """One :func:`limeqo_spark.profile.measure` record per query."""
     from limeqo_spark.manifest import REGISTRY
+    from limeqo_spark.profile import measure
 
     out = {}
     for name in names:
-        t0 = time.perf_counter()
-        REGISTRY[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 2)
+        out[name] = measure(spark, lambda: REGISTRY[name].builder(spark, sf_dir))
         # measurements are standalone: drop relations a query cached so the
         # Nx pass isn't squeezed by 1x leftovers (same rationale as bench.py)
         spark.catalog.clearCache()
@@ -284,9 +285,11 @@ def main() -> None:
         "replicate_part": replicate_part,
         "queries": {
             q: {
-                "x1_s": base[q],
-                f"x{n}_s": big[q],
-                "ratio": round(big[q] / base[q], 2) if base[q] > 0 else None,
+                "x1_s": round(base[q]["wall_s"], 2),
+                f"x{n}_s": round(big[q]["wall_s"], 2),
+                "ratio": round(big[q]["wall_s"] / base[q]["wall_s"], 2),
+                "x1": base[q],
+                f"x{n}": big[q],
             }
             for q in names
         },

@@ -1,5 +1,5 @@
 """bench.py's run-record store: one append-only JSONL file per (round, cpus,
-sf) key, and the clean-run filter that reads it. No Spark needed."""
+sf) key, and the line a run prints. No Spark needed."""
 
 from __future__ import annotations
 
@@ -8,18 +8,15 @@ import json
 import bench
 
 
-def _record(cpus: int, value: float, contended: bool, round_tag: str = "rt") -> dict:
+def _record(cpus: int, value: float, loaded: bool, round_tag: str = "rt") -> dict:
     return {
         "metric": "headline_query_wall",
         "value": value,
         "unit": "sec",
         "queries": {"q01": value},
-        "calibration": {
-            "cal_ratio": 2.5 if contended else 0.9,
-            "contended": contended,
-            "queries_with_hot_reps": 1 if contended else 0,
-            "queries_contended": ["q01"] if contended else [],
-        },
+        "counters_differ": {"q01": ["shuffle_write_bytes"]} if loaded else {},
+        "loadavg_start": [3.5, 2.0, 1.0] if loaded else [0.1, 0.1, 0.1],
+        "loadavg_end": [4.0, 2.5, 1.2] if loaded else [0.1, 0.1, 0.1],
         "sf": "/data/sf0.1",
         "cpus": cpus,
         "round": round_tag,
@@ -62,17 +59,9 @@ def test_contended_record_appends_and_prints(tmp_path, capsys):
     path, line_no = bench.append_run(str(tmp_path), record)
     print(json.dumps(bench.compact_line(record, path, line_no)))
     printed = json.loads(capsys.readouterr().out.strip())
-    assert printed["contended"] is True
+    assert printed["loadavg_start"] == [3.5, 2.0, 1.0] and printed["loadavg_end"][0] == 4.0
+    assert printed["counters_differ"] == {"q01": ["shuffle_write_bytes"]}
+    assert printed["value"] == 30.0 and printed["queries"] == {"q01": 30.0}
     assert printed["record"] == path and printed["record_line"] == 1
     assert printed["sim_error"].startswith("FileNotFoundError: ")
     assert json.loads(open(path).read())["value"] == 30.0
-
-
-def test_clean_runs_returns_exactly_the_uncontended_records_of_the_key(tmp_path):
-    values = [(10.0, False), (30.0, True), (12.0, False), (31.0, True)]
-    for value, contended in values:
-        path, _ = bench.append_run(str(tmp_path), _record(32, value, contended))
-    bench.append_run(str(tmp_path), _record(8, 9.0, False))
-    bench.append_run(str(tmp_path), _record(32, 8.0, False, round_tag="other"))
-    assert [r["value"] for r in bench.clean_runs(path)] == [10.0, 12.0]
-    assert all(r["cpus"] == 32 for r in bench.clean_runs(path))
