@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the simulation-mode
-LimeQO run on the reference JOB matrix (BASELINE.md track 1).
+strategy suite on the reference JOB, CEB and DSB matrices at their first
+published checkpoints (BASELINE.md track 1).
 
 Each query runs one cold rep and :data:`WARM_REPS` warm reps, each through
 :func:`limeqo_spark.profile.measure`; the headline is the sum over queries
@@ -18,6 +19,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from datetime import datetime, timezone
 
@@ -68,7 +70,7 @@ def compact_line(record: dict, path: str, line_no: int) -> dict:
     line = {k: record[k] for k in ("metric", "value", "unit", "loadavg_start", "loadavg_end",
                                    "counters_differ")}
     line.update(
-        queries={k: v for k, v in record["queries"].items() if not k.startswith("sim_")},
+        queries=record["queries"],
         sf=record["sf"],
         record=path,
         record_line=line_no,
@@ -128,6 +130,30 @@ HEADLINE = [
 ]
 
 
+#: stochastic reps per strategy in the sim track
+SIM_REPS = 5
+
+
+def sim_track(workloads: dict, out_root: str) -> dict[str, float]:
+    """Simulation-mode track (BASELINE.md track 1): the strategy suite on
+    each dataset's matrix up to its first published checkpoint.
+    ``sim_<ds>_<strategy>`` is the mean total workload latency there, in
+    the published unit, next to the published ``sim_<ds>_<strategy>_baseline``."""
+    from limeqo_spark.report import PUBLISHED, PUBLISHED_STRATEGIES, UNIT_S, compare_published
+    from limeqo_spark.run_experiment import PLUS_KW, run_suite
+
+    sim = {}
+    for ds, wl in workloads.items():
+        budget = PUBLISHED[ds]["grid"][0] * UNIT_S[PUBLISHED[ds]["unit"]]
+        out = os.path.join(out_root, ds)
+        run_suite(wl, out, list(PUBLISHED_STRATEGIES), SIM_REPS, budget, PLUS_KW.get(ds))
+        first = compare_published(out, ds, budget)["checkpoints"][0]
+        for s in PUBLISHED_STRATEGIES:
+            sim[f"sim_{ds}_{s}"] = first[s]["ours"]
+            sim[f"sim_{ds}_{s}_baseline"] = first[s]["baseline"]
+    return sim
+
+
 def main() -> None:
     from limeqo_spark.manifest import REGISTRY
     from limeqo_spark.profile import measure
@@ -163,161 +189,27 @@ def main() -> None:
         if differ:
             counters_differ[name] = differ
 
-    # simulation-mode track (BASELINE.md track 1): LimeQO on the reference's
-    # own matrices at its published exploration-budget checkpoints.
-    # Baselines to beat: JOB@90s -> 112.4 s; CEB@0.75h -> 1.615 h
-    # (default 181 s / 2.94 h).
     sim: dict[str, float] = {}
     sim_error: str | None = None
+    t0 = time.perf_counter()
     try:
         if os.environ.get("SPARK_GRAFT_SKIP_SIM"):
             raise RuntimeError("sim track skipped via SPARK_GRAFT_SKIP_SIM")
+        from limeqo_spark.report import PUBLISHED
         from limeqo_spark.run_experiment import load_dataset
-        from limeqo_spark.strategies import LimeQOStrategy
 
-        wl = load_dataset("job")
-        t0 = time.perf_counter()
-        rec = LimeQOStrategy(wl, k=8, seed=1, max_rounds=200, time_budget=90.0).run()
-        timings["sim_job_limeqo"] = round(time.perf_counter() - t0, 3)
-        sim["sim_job_limeqo_final_latency"] = round(float(rec[-1]["total_latency"]), 2)
-
-        # baseline-table companions at JOB@90s: Random 138.4 s (20-rep
-        # mean), Greedy 120.4 s
-        from limeqo_spark.strategies import GreedyStrategy, RandomStrategy
-
-        t0 = time.perf_counter()
-        rnd = [
-            RandomStrategy(wl, k=8, seed=s, max_rounds=200, time_budget=90.0)
-            .run()[-1]["total_latency"]
-            for s in range(1, 6)
-        ]
-        sim["sim_job_random_final_latency"] = round(sum(rnd) / len(rnd), 2)
-        rec = GreedyStrategy(wl, k=8, seed=1, max_rounds=200, time_budget=90.0).run()
-        sim["sim_job_greedy_final_latency"] = round(float(rec[-1]["total_latency"]), 2)
-        timings["sim_job_random_greedy"] = round(time.perf_counter() - t0, 3)
-
-        from limeqo_spark.strategies import LimeQOPlusStrategy
-
-        t0 = time.perf_counter()
-        # no k override: LimeQO+ uses its default k=16 batches
-        rec = LimeQOPlusStrategy(wl, seed=1, max_rounds=500, time_budget=90.0).run()
-        timings["sim_job_limeqo_plus"] = round(time.perf_counter() - t0, 3)
-        sim["sim_job_limeqo_plus_final_latency"] = round(
-            float(rec[-1]["total_latency"]), 2
-        )  # baseline LimeQO+@90s: 109.3 s
-
-        wl_ceb = load_dataset("ceb")
-        t0 = time.perf_counter()
-        rec = LimeQOStrategy(
-            wl_ceb, k=8, seed=1, max_rounds=100_000, time_budget=0.75 * 3600
-        ).run()
-        timings["sim_ceb_limeqo"] = round(time.perf_counter() - t0, 3)
-        sim["sim_ceb_limeqo_final_latency_h"] = round(
-            float(rec[-1]["total_latency"]) / 3600, 4
-        )
-
-        t0 = time.perf_counter()
-        # baseline CEB@0.75h: LimeQO 1.615 h, LimeQO+ 1.293 h. Primary
-        # config: the executed NumpyTCNN (censored hinge loss) averaging 3
-        # restarts (n_nets=3, chosen by the sweep frozen in
-        # docs/tcnn_ensemble_lab_r11.json). The headline is the median over
-        # five fixed, unselected base inits (net_seed 0..4), all shipped in
-        # the record; the init-free ALS row below is the seed-free check.
-        tcnn_by_init = {}
-        for net_seed in range(5):
-            rec = LimeQOPlusStrategy(
-                wl_ceb, seed=1, max_rounds=100_000, time_budget=0.75 * 3600,
-                model="tcnn", net_seed=net_seed, n_nets=3,
-            ).run()
-            tcnn_by_init[net_seed] = round(float(rec[-1]["total_latency"]) / 3600, 4)
-        timings["sim_ceb_limeqo_plus"] = round(time.perf_counter() - t0, 3)
-        vals = sorted(tcnn_by_init.values())
-        sim["sim_ceb_limeqo_plus_final_latency_h"] = vals[len(vals) // 2]
-        sim["sim_ceb_limeqo_plus_config"] = (
-            "tcnn n_nets=3 (restart-averaged, r11): median over five fixed "
-            f"unselected base inits (net_seed 0..4); per-init values "
-            f"{tcnn_by_init}. Init-free ALS fallback reported as "
-            "sim_ceb_limeqo_plus_als_final_latency_h."
-        )
-        t0 = time.perf_counter()
-        # robustness row: the init-free restart-averaged censored-ALS
-        # fallback (no pinned seeds anywhere; ~1.44-1.45 h across seeds)
-        rec = LimeQOPlusStrategy(
-            wl_ceb, seed=1, max_rounds=100_000, time_budget=0.75 * 3600
-        ).run()
-        timings["sim_ceb_limeqo_plus_als"] = round(time.perf_counter() - t0, 3)
-        sim["sim_ceb_limeqo_plus_als_final_latency_h"] = round(
-            float(rec[-1]["total_latency"]) / 3600, 4
-        )
-
-        wl_dsb = load_dataset("dsb")
-        t0 = time.perf_counter()
-        rec = LimeQOStrategy(
-            wl_dsb, k=8, seed=1, max_rounds=100_000, time_budget=1.19 * 3600
-        ).run()  # baseline LimeQO@1.19h: 3.822 h (default 4.75 h)
-        timings["sim_dsb_limeqo"] = round(time.perf_counter() - t0, 3)
-        sim["sim_dsb_limeqo_final_latency_h"] = round(
-            float(rec[-1]["total_latency"]) / 3600, 4
-        )
-
-        t0 = time.perf_counter()
-        # baseline DSB@1.19h: LimeQO+ 3.407 h
-        rec = LimeQOPlusStrategy(
-            wl_dsb, seed=1, max_rounds=100_000, time_budget=1.19 * 3600
-        ).run()
-        timings["sim_dsb_limeqo_plus"] = round(time.perf_counter() - t0, 3)
-        sim["sim_dsb_limeqo_plus_final_latency_h"] = round(
-            float(rec[-1]["total_latency"]) / 3600, 4
-        )
-
-        # distributed-completer drop-in proof on a SECOND reference matrix
-        # (VERDICT r5 next-round #8): the MLlib-ALS exploration loop runs
-        # the full DSB@1.19h budget end-to-end; its final latency must land
-        # within 10% of the numpy loop's, and the one-fit top-k=32
-        # selection overlap on the init mask quantifies solver agreement.
-        import numpy as np
-
-        from limeqo_spark.complete import complete_log_space
-        from limeqo_spark.strategies import (
-            MLlibLimeQOStrategy,
-            rank_cells_by_improvement,
-        )
-
-        t0 = time.perf_counter()
-        rec = MLlibLimeQOStrategy(
-            wl_dsb, spark=spark, seed=1, max_rounds=100_000,
-            time_budget=1.19 * 3600,
-        ).run()
-        timings["sim_dsb_mllib_limeqo"] = round(time.perf_counter() - t0, 3)
-        sim["sim_dsb_mllib_final_latency_h"] = round(
-            float(rec[-1]["total_latency"]) / 3600, 4
-        )
-        mo = np.where(wl_dsb.mask > 0, wl_dsb.matrix, np.inf).min(axis=1)
-        npy_pred = complete_log_space(
-            wl_dsb.matrix, wl_dsb.mask, None, rank=5, iters=50, lam=0.2, seed=0
-        ).completed
-        mll = MLlibLimeQOStrategy(
-            wl_dsb, spark=spark, seed=0, max_rounds=1, time_budget=None
-        )
-        mll.fit()  # one fit on the untouched init mask (state = fresh copy)
-        k = 32
-        a = set(rank_cells_by_improvement(npy_pred, wl_dsb.mask, mo, k))
-        b = set(rank_cells_by_improvement(mll.pred, wl_dsb.mask, mo, k))
-        sim["sim_dsb_mllib_agreement_k32"] = round(len(a & b) / max(len(a), 1), 4)
+        with tempfile.TemporaryDirectory() as tmp:
+            sim = sim_track({ds: load_dataset(ds) for ds in PUBLISHED}, tmp)
     except Exception as e:  # sim track must never sink the bench line
         sim_error = f"{type(e).__name__}: {e}"
 
-    # headline value = query-engine wall only; the sim_* rows are SOLVER
-    # overhead (BASELINE.md reports them separately too), summed on their
-    # own; legacy_total_wall keeps the older queries + sim sum.
-    total = round(sum(v for k, v in timings.items() if not k.startswith("sim_")), 3)
-    sim_total = round(sum(v for k, v in timings.items() if k.startswith("sim_")), 3)
+    # headline value = query-engine wall only; the sim track is solver
+    # overhead (BASELINE.md reports it separately too)
     full = {
         "metric": "headline_query_wall",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "sim_overhead_total": sim_total,
-        "legacy_total_wall": round(total + sim_total, 3),
+        "sim_overhead_total": round(time.perf_counter() - t0, 3),
         "timing": (
             f"per-query median of {WARM_REPS} warm reps after 1 cold rep, each a "
             "profile.measure run (build + plan + execute, no write); through r12 "
@@ -335,22 +227,6 @@ def main() -> None:
     }
     full.update(sim)
     full["sim_error"] = sim_error
-    if sim:
-        # published reference checkpoints (BASELINE.md) next to our numbers,
-        # same keys minus the prefix, so the comparison is self-contained
-        full["sim_baselines"] = {
-            "job_limeqo_at_90s": 112.4,
-            "job_random_at_90s": 138.4,
-            "job_greedy_at_90s": 120.4,
-            "job_limeqo_plus_at_90s": 109.3,
-            "job_default": 181.0,
-            "ceb_limeqo_at_0.75h": 1.615,
-            "ceb_limeqo_plus_at_0.75h": 1.293,
-            "ceb_default_h": 2.94,
-            "dsb_limeqo_at_1.19h": 3.822,
-            "dsb_limeqo_plus_at_1.19h": 3.407,
-            "dsb_default_h": 4.75,
-        }
     path, line_no = append_run(DOCS_DIR, full)
     print(json.dumps(compact_line(full, os.path.relpath(path, os.path.dirname(DOCS_DIR)), line_no)))
     sys.stdout.flush()

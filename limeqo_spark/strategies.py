@@ -16,7 +16,6 @@ explore_queries_cnt.
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import dataclass
 
@@ -261,7 +260,7 @@ class Strategy:
                     break
         return chosen
 
-    def run(self, output_path: str | None = None) -> list[dict]:
+    def run(self) -> list[dict]:
         """The exploration loop, sim and live alike: each round records the
         executor's metrics, checks the stop rule, fits, selects, and pays
         for the selected cells through ``state.reveal_or_censor``."""
@@ -290,9 +289,6 @@ class Strategy:
                     and self.state.spent >= self.time_budget
                 ):
                     break
-            if output_path:
-                with open(output_path, "w") as f:
-                    json.dump(records, f, indent=2)
         return records
 
 
@@ -588,70 +584,6 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         return achieved >= 0.95 * perfect
 
 
-class MLlibLimeQOStrategy(LimeQOStrategy):
-    """The stated 100 TB completion path exercised END-TO-END (VERDICT r4
-    next-round #6): the exploration loop is LimeQO's, but ``fit()`` runs the
-    DISTRIBUTED MLlib ALS completer (:func:`limeqo_spark.complete.
-    mllib_als_complete`) over the long-form observations instead of the
-    driver-numpy solver. For matrices that fit one machine the numpy solver
-    is strictly faster (no JVM round-trip per refit); this class is the
-    drop-in for workload matrices that would NOT fit a driver (millions of
-    queries), and the agreement test/gate pins that both solvers drive the
-    same exploration.
-
-    The MLlib path is uncensored by construction (= the reference's
-    "wocensored" ablation; ALS ratings carry no inequality targets), so
-    ``use_censored`` is forced False. Timeout guards still apply through
-    ``tolerance()``. Cold cells (a hint column with no observation anywhere)
-    predict NaN under ``coldStartStrategy="nan"``; they are mapped to +inf —
-    never ranked, left to ``random_fill`` — rather than a fake number.
-    """
-
-    name = "limeqo_mllib"
-
-    def __init__(self, *args, spark=None, **kw):
-        kw["use_censored"] = False
-        super().__init__(*args, **kw)
-        if spark is None:
-            raise ValueError("MLlibLimeQOStrategy requires a live SparkSession")
-        self.spark = spark
-
-    def fit(self) -> None:
-        import pandas as pd
-
-        from limeqo_spark.complete import mllib_als_complete
-
-        st = self.state
-        q, h = st.mask.shape
-        qi, hi = np.meshgrid(np.arange(q), np.arange(h), indexing="ij")
-        obs = st.mask.ravel() > 0
-        pdf = pd.DataFrame(
-            {
-                "query_idx": qi.ravel().astype(np.int64),
-                "hint_id": hi.ravel().astype(np.int32),
-                "latency": np.where(obs, st.matrix.ravel(), 0.0),
-                "observed": obs,
-            }
-        )
-        long_df = self.spark.createDataFrame(pdf)
-        pred_pdf = mllib_als_complete(
-            self.spark,
-            long_df,
-            rank=self.rank,
-            iters=min(self.iters, 15),
-            lam=self.lam,
-            seed=int(self.rng.integers(2**31)),
-        ).toPandas()
-        pred = np.full((q, h), np.inf)
-        vals = pred_pdf["pred_latency"].to_numpy()
-        keep = np.isfinite(vals)
-        pred[
-            pred_pdf["query_idx"].to_numpy()[keep],
-            pred_pdf["hint_id"].to_numpy()[keep],
-        ] = vals[keep]
-        self.pred = pred
-
-
 STRATEGIES = {
     s.name: s
     for s in (
@@ -713,7 +645,7 @@ class BaoStrategy(Strategy):
             seed=int(self.rng.integers(2**31)),
         ).completed
 
-    def run(self, output_path: str | None = None) -> list[dict]:
+    def run(self) -> list[dict]:
         wl = self.wl
         q, h = wl.matrix.shape
         obs_mask = wl.mask.astype(np.float64).copy()
@@ -777,9 +709,6 @@ class BaoStrategy(Strategy):
                 )
                 if over_budget:
                     break
-        if output_path:
-            with open(output_path, "w") as f:
-                json.dump(records, f, indent=2)
         return records
 
 

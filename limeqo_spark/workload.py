@@ -170,41 +170,11 @@ def workload_percentiles(long_df: DataFrame) -> DataFrame:
     )
 
 
-def exec_time_deduped(long_df: DataFrame, plan_groups: DataFrame) -> DataFrame:
-    """A15: exploration cost, paying each physical plan once per query.
-
-    ``plan_groups`` maps (query_idx, hint_id) -> plan_hash; equivalent hints
-    share a hash, so dropDuplicates bills each plan group once.
-    """
-    return (
-        long_df.filter("observed")
-        .join(F.broadcast(plan_groups), ["query_idx", "hint_id"], "left")
-        .withColumn("plan_hash", F.coalesce("plan_hash", F.concat_ws("#", "query_idx", "hint_id")))
-        .dropDuplicates(["query_idx", "plan_hash"])
-        .agg(F.sum("latency").alias("exec_time"))
-    )
-
-
 def topk_by_improvement(
     candidates: DataFrame, k: int, improve_col: str = "improve"
 ) -> DataFrame:
     """A16: rank unexplored cells by predicted improvement, take k."""
     return candidates.orderBy(F.col(improve_col).desc(), "query_idx", "hint_id").limit(k)
-
-
-def worst_first(long_df: DataFrame) -> DataFrame:
-    """A17: queries ranked slowest-best-observed first (greedy exploration)."""
-    return min_observed(long_df).orderBy(F.col("min_observed").desc(), "query_idx")
-
-
-def svd_spectrum(matrix: np.ndarray, normalize: bool = True) -> np.ndarray:
-    """A35: singular-value spectrum of the workload matrix — the low-rank
-    justification diagnostic (compare against a same-shape random matrix:
-    a steep drop-off means completion will work). 49 columns -> driver
-    numpy is exact and instant; at distributed scale use
-    pyspark.mllib.linalg.distributed.RowMatrix.computeSVD."""
-    s = np.linalg.svd(matrix, compute_uv=False)
-    return s / s[0] if normalize and s[0] > 0 else s
 
 
 def equivalence_groups_from_values(long_df: DataFrame) -> DataFrame:

@@ -5,6 +5,9 @@ live TCNN (real EXPLAIN trees), plan-hash equivalence dedup, and censoring.
 Reports per-query best steered wall vs the optimizer default.
 
     python scripts/live_demo_tpch.py [out.json]
+
+The report goes to ``out.json`` (default :data:`DEFAULT_OUT`), which must
+not exist yet: a run never overwrites an earlier run's report.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+#: the report's default path; no committed report uses it
+DEFAULT_OUT = "docs/live_demo_tpch.json"
 QUERIES = [
     # r3-demo continuity (q48/q70 measured steering wins in round 3)
     "q48_tpch_q5_local_volume",
@@ -35,8 +40,15 @@ QUERIES = [
 ]
 
 
+def write_report(report: dict, out_path: str) -> None:
+    """Write ``report`` to ``out_path``, which must not exist yet
+    (FileExistsError naming it otherwise)."""
+    with open(out_path, "x") as f:
+        json.dump(report, f, indent=1)
+
+
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "docs/live_demo_tpch_r6.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_OUT
     from limeqo_spark.live import LiveSteeringSession
     from limeqo_spark.manifest import REGISTRY
     from limeqo_spark.session import get_spark
@@ -112,9 +124,9 @@ def main() -> None:
         "cells_measured": int(sum(1 for o in sess.observations if o.measured)),
         "cells_inherited": int(sum(1 for o in sess.observations if not o.measured)),
     }
-    with open(out_path, "w") as f:
-        json.dump(report, f, indent=1)
+    # printed first, so a report whose path is taken is not lost
     print(json.dumps(report, indent=1))
+    write_report(report, out_path)
 
 
 if __name__ == "__main__":

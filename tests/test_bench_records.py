@@ -1,11 +1,14 @@
 """bench.py's run-record store: one append-only JSONL file per (round, cpus,
-sf) key, and the line a run prints. No Spark needed."""
+sf) key, the line a run prints, and its sim track. No Spark needed."""
 
 from __future__ import annotations
 
 import json
+import math
 
 import bench
+from limeqo_spark.report import PUBLISHED
+from limeqo_spark.workload import Workload
 
 
 def _record(cpus: int, value: float, loaded: bool, round_tag: str = "rt") -> dict:
@@ -65,3 +68,15 @@ def test_contended_record_appends_and_prints(tmp_path, capsys):
     assert printed["record"] == path and printed["record_line"] == 1
     assert printed["sim_error"].startswith("FileNotFoundError: ")
     assert json.loads(open(path).read())["value"] == 30.0
+
+
+def test_sim_track_reports_each_strategy_next_to_its_published_value(tmp_path):
+    wl = Workload.synthetic_low_rank(n_rows=60, seed=1)
+    sim = bench.sim_track({"job": wl}, str(tmp_path))
+    for s in ("random", "greedy", "limeqo", "limeqo_plus"):
+        ours = sim[f"sim_job_{s}"]
+        # rounded to 3 decimals in the published unit (seconds for JOB)
+        assert math.isfinite(ours)
+        assert wl.opt_time - 5e-4 <= ours <= wl.default_time + 5e-4, s
+        assert sim[f"sim_job_{s}_baseline"] == PUBLISHED["job"][s][0]
+        assert len(list((tmp_path / "job").glob(f"{s}_[0-9]*.json"))) == bench.SIM_REPS

@@ -255,9 +255,7 @@ def test_limeqo_plus_tcnn_pinned_init_is_deterministic(reference_dataset):
 
 def test_run_experiment_suite(tmp_path, reference_dataset):
     wl = load_dataset("job")
-    finals = run_suite(
-        wl, str(tmp_path), ["oracle", "limeqo"], reps=2, k=8, budget=90.0
-    )
+    finals = run_suite(wl, str(tmp_path), ["oracle", "limeqo"], reps=2, budget=90.0)
     assert set(finals) == {"oracle", "limeqo"}
     rec = json.loads((tmp_path / "limeqo_0.json").read_text())
     assert {"training_time", "total_latency", "p99"} <= set(rec[0])
@@ -300,13 +298,58 @@ def test_report_pipeline(tmp_path):
     assert (tmp_path / "result.csv").read_text().startswith("exploration_time,demo,absent")
 
 
+def test_run_suite_runs_every_stochastic_strategy_reps_times(tmp_path):
+    """Greedy draws hints from its rng, so it runs ``reps`` seeds like
+    LimeQO+; the oracle is deterministic and runs once."""
+    from limeqo_spark.workload import Workload
+
+    wl = Workload.synthetic_low_rank(n_rows=30, seed=1)
+    finals = run_suite(wl, str(tmp_path), ["oracle", "greedy", "limeqo_plus"], reps=3, budget=5.0)
+    assert {s: len(v) for s, v in finals.items()} == {"oracle": 1, "greedy": 3, "limeqo_plus": 3}
+    for s in ("greedy", "limeqo_plus"):
+        files = sorted(p.name for p in tmp_path.glob(f"{s}_[0-9]*.json"))
+        assert files == [f"{s}_{rep}.json" for rep in range(3)]
+
+
+def test_compare_published_closed_form(tmp_path):
+    """Two hand-built reps per strategy with linear curves: the comparator
+    reports their mean at each published checkpoint within the budget, in
+    the published unit, and counts the cells at or better than published
+    and within 10% of it."""
+    from limeqo_spark.report import compare_published
+
+    def write(name, start, slope, last_t):
+        for rep, off in enumerate((0.0, 10.0)):
+            recs = [{"exec_time": t, "total_latency": start - slope * t + off}
+                    for t in (0.0, last_t)]
+            (tmp_path / f"{name}_{rep}.json").write_text(json.dumps(recs))
+
+    write("limeqo", 150.0, 0.5, 200.0)  # mean 155 - t/2
+    write("random", 200.0, 0.25, 200.0)  # mean 205 - t/4
+    out = compare_published(str(tmp_path), "job", budget=200.0)
+    assert [c["exploration"] for c in out["checkpoints"]] == ["45 s", "90 s", "180 s"]
+    assert [c["limeqo"] for c in out["checkpoints"]] == [
+        {"baseline": 132.1, "ours": 132.5},
+        {"baseline": 112.4, "ours": 110.0},
+        {"baseline": 99.4, "ours": 65.0},
+    ]
+    assert [c["random"]["ours"] for c in out["checkpoints"]] == [193.75, 182.5, 160.0]
+    assert all(c["greedy"]["ours"] is None for c in out["checkpoints"])
+    assert (out["cells"], out["at_or_better_than_baseline"], out["within_10pct"]) == (6, 2, 3)
+
+    # hours: exploration seconds map onto the hour grid, latencies to hours
+    write("limeqo", 7200.0, 0.5, 7200.0)  # mean 7205 - t/2 seconds
+    out = compare_published(str(tmp_path), "ceb")
+    assert [c["limeqo"]["ours"] for c in out["checkpoints"][:2]] == [1.626, 1.251]
+
+
 def test_report_on_real_experiment(tmp_path, reference_dataset):
     """End-to-end: run_experiment -> report; LimeQO's curve must be
     monotone non-increasing and bounded by [opt, default]."""
     from limeqo_spark.report import checkpoint_table
 
     wl = load_dataset("job")
-    run_suite(wl, str(tmp_path), ["limeqo"], reps=2, k=8, budget=180.0)
+    run_suite(wl, str(tmp_path), ["limeqo"], reps=2, budget=180.0)
     rows = checkpoint_table(str(tmp_path), ["limeqo"], [45.0, 90.0, 180.0])
     vals = [r["limeqo"] for r in rows]
     assert all(v is not None for v in vals)
