@@ -1,9 +1,18 @@
 #!/usr/bin/env python
 """Scale probe: replicate the sf0.1 fixtures N-fold (key-offset so join
 cardinalities scale linearly, not quadratically) into /tmp, then measure a
-set of heavy operators at 1x and Nx and report the wall-time scaling ratio,
-next to each run's profile record (executor CPU seconds, shuffle bytes, task
-p50/max; see limeqo_spark/profile.py).
+set of heavy operators at 1x and Nx and report, per query, the wall-time
+ratio and the executor-CPU ratio (``cpu_ratio``, executor CPU seconds at Nx
+over 1x) with both runs' task counts, next to each run's profile record
+(executor CPU seconds, shuffle bytes, task p50/max; see
+limeqo_spark/profile.py).
+
+ROADMAP item 7's "x16 probe ratio <= 3" bar reads ``cpu_ratio``. A wall
+ratio on a host with idle cores measures unused parallelism, not scaling:
+at sf0.1 q16's lineitem is one file read by one task, so x1 runs one task
+on 4 cores while x4 runs four side by side, and
+``python scripts/scale_probe.py 4 q16_tpch_q1_agg`` (4 vCPUs) read a wall
+ratio of 1.06 against a cpu_ratio of 3.28 (0.73 -> 2.39 s; tasks 6 -> 7).
 
 An operator whose plan is scale-sane grows ~linearly (ratio ~= N on a fixed
 local core budget); a quadratic candidate-pair blowup or a hot-key stall
@@ -254,6 +263,23 @@ def time_queries(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
     return out
 
 
+def report_row(base: dict, big: dict, n: int) -> dict:
+    """One query's report: the 1x and Nx walls, their ratio, ``cpu_ratio``
+    (executor CPU seconds at Nx over 1x; None when 1x read 0) and each
+    run's task count, followed by both profile records."""
+    cpu_x1 = base["executor_cpu_s"]
+    return {
+        "x1_s": round(base["wall_s"], 2),
+        f"x{n}_s": round(big["wall_s"], 2),
+        "ratio": round(big["wall_s"] / base["wall_s"], 2),
+        "cpu_ratio": round(big["executor_cpu_s"] / cpu_x1, 2) if cpu_x1 else None,
+        "x1_tasks": base["tasks"],
+        f"x{n}_tasks": big["tasks"],
+        "x1": base,
+        f"x{n}": big,
+    }
+
+
 def main() -> None:
     # scale probes intentionally run ABOVE the bitext miner's oracle-pinned
     # nlist floor; opt in to the quantizer refit the builder otherwise
@@ -286,16 +312,7 @@ def main() -> None:
         "perturb_documents": perturb_docs,
         "graph_offsets": graph,
         "replicate_part": replicate_part,
-        "queries": {
-            q: {
-                "x1_s": round(base[q]["wall_s"], 2),
-                f"x{n}_s": round(big[q]["wall_s"], 2),
-                "ratio": round(big[q]["wall_s"] / base[q]["wall_s"], 2),
-                "x1": base[q],
-                f"x{n}": big[q],
-            }
-            for q in names
-        },
+        "queries": {q: report_row(base[q], big[q], n) for q in names},
     }
     if perturb_docs and "dedup_simhash" in names:
         report["simhash_planted_recall"] = simhash_planted_recall(spark, replica, n)

@@ -1266,7 +1266,7 @@ def test_e2e_curate_chain_consistency(spark, sf_dir):
         assert row["n_docs"] <= per_lang_n[lang]
 
 
-def test_streaming_checkpoint_recovery_exactly_once(spark, sf_dir):
+def test_streaming_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     """Exactly-once across a restart: a stateful streaming dedup
     (dropDuplicates on event_id) writes to a parquet sink with a
     checkpoint; the stream is stopped, the source gains a second file
@@ -1275,14 +1275,12 @@ def test_streaming_checkpoint_recovery_exactly_once(spark, sf_dir):
     (the dedup state survives the restart). Sink rows therefore equal the
     distinct event_ids across both files, with zero duplicate rows."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from limeqo_spark.io import table
 
-    root = tempfile.mkdtemp(prefix="limeqo_ckpt_")
-    src, sink, ck = (os.path.join(root, d) for d in ("src", "sink", "ck"))
+    src, sink, ck = (str(tmp_path / d) for d in ("src", "sink", "ck"))
     os.makedirs(src)
     ev = table(spark, sf_dir, "events").select("event_id", "user_id")
     ev.filter(F.col("event_id") < 500).coalesce(1).write.parquet(

@@ -1,7 +1,8 @@
 """The command-line scripts: each one (and bench.py) imports cleanly
 without running its ``main``, so a script that still names a deleted
-function fails here rather than at its next manual run; and the live demo
-never overwrites an earlier report. No Spark needed."""
+function fails here rather than at its next manual run; the live demo
+never overwrites an earlier report; and the scale probe's report row reads
+executor CPU next to wall. No Spark needed."""
 
 from __future__ import annotations
 
@@ -42,3 +43,15 @@ def test_live_demo_report_is_never_overwritten(tmp_path, monkeypatch):
     with pytest.raises(FileExistsError, match="report.json"):
         demo.write_report({"run": 2}, out)
     assert open(out).read() == '{\n "run": 1\n}'
+
+
+def test_scale_probe_row_reports_cpu_ratio_and_task_counts(monkeypatch):
+    probe = _load(os.path.join(REPO, "scripts", "scale_probe.py"), monkeypatch)
+    x1 = {"wall_s": 1.02, "executor_cpu_s": 0.73, "tasks": 6}
+    x4 = {"wall_s": 1.08, "executor_cpu_s": 2.39, "tasks": 7}
+    row = probe.report_row(x1, x4, 4)
+    assert row == {
+        "x1_s": 1.02, "x4_s": 1.08, "ratio": 1.06, "cpu_ratio": 3.27,
+        "x1_tasks": 6, "x4_tasks": 7, "x1": x1, "x4": x4,
+    }
+    assert probe.report_row({**x1, "executor_cpu_s": 0.0}, x4, 4)["cpu_ratio"] is None
