@@ -7,7 +7,7 @@ published checkpoints (BASELINE.md track 1).
 Each query runs one cold rep and :data:`WARM_REPS` warm reps, each through
 :func:`limeqo_spark.profile.measure`; the headline is the sum over queries
 of the median warm wall. Each run appends its full record, with every rep's
-profile (counters, executor CPU seconds, task p50/max), to
+profile (counters, executor CPU seconds, task p50/max, codegen compiles), to
 ``docs/bench/<round>-cpus<N>-<sf>.jsonl`` and prints ONE compact JSON line
 naming that file and line.
 """

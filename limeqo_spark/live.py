@@ -67,7 +67,8 @@ class LiveSteeringSession(CellExecutor):
         self.spent = 0.0
         self.cells_explored = 0
         self._built: dict[int, dict[str | None, DataFrame]] = {}
-        self._planned: dict[tuple[int, int], DataFrame] = {}
+        #: planned frame per (query, plan hash) of an unexplored plan class
+        self._planned: dict[tuple[int, str], DataFrame] = {}
         self._plan_hashes: dict[tuple[int, int], str] = {}
         self._plan_texts: dict[tuple[int, int], str] = {}
 
@@ -78,36 +79,41 @@ class LiveSteeringSession(CellExecutor):
 
     def _fingerprints(self, qi: int) -> dict[int, str]:
         """Plan hash per hint for one query (planning only, one build per
-        join hint: steer.hint_plans). The built frames are kept, each
-        unexplored cell's planned frame for its run and each cell's EXPLAIN
-        text for :meth:`trees`, so a cell is built and planned once per
-        session unless it runs again."""
+        join hint: steer.hint_plans). The built frames are kept, one planned
+        frame per plan class with an unexplored cell (the first such cell's)
+        for the class's run, and each cell's EXPLAIN text for :meth:`trees`,
+        so a class's first run builds and plans nothing. A run explores its
+        whole class (:meth:`execute_cell`), so the loop runs at most one
+        cell per class."""
         if qi not in self._built:
             build = self.queries[self.query_ids[qi]]
             self._built[qi], planned, texts = hint_plans(self.spark, build, self.hint_sets)
             for hj, (df, text) in enumerate(zip(planned, texts)):
+                fp = plan_hash(text)
                 if self.explored[qi, hj] == 0:
-                    self._planned[(qi, hj)] = df
+                    self._planned.setdefault((qi, fp), df)
                 self._plan_texts[(qi, hj)] = text
-                self._plan_hashes[(qi, hj)] = plan_hash(text)
+                self._plan_hashes[(qi, hj)] = fp
         return {hj: self._plan_hashes[(qi, hj)] for hj in range(len(self.hint_sets))}
 
     def frame(self, qi: int, hj: int) -> DataFrame:
-        """This cell's frame to run. The first call on an unexplored cell
-        returns the frame the fingerprint pass planned; any other call a
-        fresh copy of the built frame (``plans.replanned``), planned under
-        the confs in effect when it is run or planned. A QueryExecution is
-        executed at most once (steer.run_steered), and the session keeps
-        planned frames for unexplored cells only."""
+        """This cell's frame to run. The first call on a cell of an
+        unexplored plan class returns the frame the fingerprint pass
+        planned for the class, which has this cell's physical plan; any
+        other call a fresh copy of the built frame (``plans.replanned``),
+        planned under the confs in effect when it is run or planned. A
+        QueryExecution is executed at most once (steer.run_steered), and
+        the session keeps planned frames for unexplored classes only."""
         self._fingerprints(qi)
-        planned = self._planned.pop((qi, hj), None)
+        planned = self._planned.pop((qi, self._plan_hashes[(qi, hj)]), None)
         if planned is not None:
             return planned
         return replanned(self._built[qi][self.hint_sets[hj].join_hint])
 
     def _record(self, qi: int, hj: int, latency: float | None, cutoff: float | None, fp: str, measured: bool) -> None:
         self.explored[qi, hj] = 1
-        self._planned.pop((qi, hj), None)  # the loop runs an explored cell no more: free its plan
+        # the loop runs no cell of an explored class: free the class's plan
+        self._planned.pop((qi, self._plan_hashes.get((qi, hj))), None)
         if latency is not None:
             self.matrix[qi, hj] = latency
         elif cutoff is not None:

@@ -10,6 +10,10 @@ and tasks from the in-process status store, which Spark keeps whether or
 not its UI is enabled. Rows, jobs, stages, tasks and bytes are counters a
 noisy neighbour cannot move; executor CPU seconds it moves far less than
 wall time.
+
+It also counts the classes Janino compiled during the run, from Spark's
+JVM-wide ``CodegenMetrics``: a warm rep of a query whose generated classes
+are still in the codegen cache compiles none.
 """
 
 from __future__ import annotations
@@ -27,6 +31,9 @@ _JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.int
 #: longest wait for the listener bus to hand the run's events to the store
 _BUS_WAIT_MS = 30_000
 _ALL_TASKS = 2**31 - 1
+#: Spark's codegen metrics source, by its dotted name (one py4j lookup that
+#: hits; see :mod:`limeqo_spark.session`)
+_CODEGEN_METRICS = "org.apache.spark.metrics.source.CodegenMetrics"
 
 
 def _seq(jseq) -> list:
@@ -58,10 +65,13 @@ def measure(spark: SparkSession, build: Callable[[], DataFrame]) -> dict:
     - ``executor_run_s``, ``executor_cpu_s``: summed over the tasks;
     - ``shuffle_read_bytes``, ``shuffle_write_bytes`` (compressed, so a
       different row order can change them slightly),
-      ``shuffle_write_records``, ``spill_bytes`` (spilled to disk),
-      ``input_bytes``;
+      ``shuffle_write_records``, ``spill_bytes`` (spilled to disk);
     - ``task_p50_s``, ``task_max_s``: task durations over all the run's
-      tasks (None without tasks); max over p50 is the skew signal.
+      tasks (None without tasks); max over p50 is the skew signal;
+    - ``codegen_compiles``: the generated classes Janino compiled during
+      the build, plan and run (the change in the count of
+      ``CodegenMetrics.METRIC_COMPILATION_TIME``). The counter is JVM-wide,
+      so the figure is exact only when one query runs at a time.
 
     Jobs the builder itself runs (a fitted model, an ingest-time write)
     count as the run's. The thread's job group is restored afterwards,
@@ -71,6 +81,8 @@ def measure(spark: SparkSession, build: Callable[[], DataFrame]) -> dict:
     saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
     group = f"limeqo-profile-{uuid.uuid4().hex[:12]}"
     sc.setJobGroup(group, "limeqo profile")
+    compilations = getattr(spark._jvm, _CODEGEN_METRICS).METRIC_COMPILATION_TIME()
+    compiled0 = compilations.getCount()
     try:
         t0 = time.perf_counter()
         df = build()
@@ -80,6 +92,7 @@ def measure(spark: SparkSession, build: Callable[[], DataFrame]) -> dict:
         t2 = time.perf_counter()
         rows = qe.toRdd().count()
         t3 = time.perf_counter()
+        compiled = compilations.getCount() - compiled0
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
@@ -107,7 +120,7 @@ def measure(spark: SparkSession, build: Callable[[], DataFrame]) -> dict:
         "shuffle_write_bytes": sum(st.shuffleWriteBytes() for st in stages),
         "shuffle_write_records": sum(st.shuffleWriteRecords() for st in stages),
         "spill_bytes": sum(st.diskBytesSpilled() for st in stages),
-        "input_bytes": sum(st.inputBytes() for st in stages),
         "task_p50_s": statistics.median(durations_ms) / 1e3 if durations_ms else None,
         "task_max_s": max(durations_ms) / 1e3 if durations_ms else None,
+        "codegen_compiles": compiled,
     }

@@ -5,6 +5,13 @@ code is correct on a large cluster: AQE on (runtime coalesce + skew joins),
 UTC session timezone (deterministic vs external oracles), Arrow enabled for
 the Pandas-UDF paths.
 
+Spark's codegen cache is sized to the engine's working set
+(:data:`CODEGEN_CACHE_ENTRIES`). The engine runs the same queries again and
+again, under many hint sets, and a pass over its headline entries uses more
+distinct generated classes than Spark's default 100-entry LRU holds, so at
+the default each pass evicted every class before its next use and compiled
+it again: Janino compilation, then JIT compilation of the fresh classes.
+
 It also resolves the py4j names that PySpark looks up on hot paths once per
 gateway (:func:`_pin_hot_names`). py4j resolves a dot-free name such as
 ``jvm.PythonUtils`` by probing the name and then each of the gateway's star
@@ -28,6 +35,15 @@ HOT_NAMES = {
     "PythonUtils": "org.apache.spark.api.python.PythonUtils",
     "functions": "org.apache.spark.sql.functions",
 }
+
+
+#: ``spark.sql.codegen.cache.maxEntries`` (a static conf; Spark's default is
+#: 100). Measured on 4 vCPUs in a JVM limited to the C1 compiler, with an
+#: unbounded cache: the 43 headline entries at sf0.01 compile 588 distinct
+#: classes on their first pass and 4 on their second (at 100 entries, 645);
+#: after them, metaspace is at 168 MB (165 MB at 100 entries) and the C1
+#: code cache at 41.0 of 48 MB.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def _pin_hot_names(jvm: JVMView) -> None:
@@ -80,6 +96,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -116,3 +116,40 @@ def test_explore_needs_bootstrap(monkeypatch):
     s = FakeSpark(quantized(1), monkeypatch).session(seed=1)
     with pytest.raises(RuntimeError, match="bootstrap"):
         s.explore(rounds=1)
+
+
+class FramePerHint(FakeSpark):
+    """FakeSpark whose fingerprint pass plans a distinct frame per hint,
+    ``(qi, hint)``, so a test can tell which cell's plan a run executed."""
+
+    def hint_plans(self, spark, build, hint_sets):
+        built, _, texts = super().hint_plans(spark, build, hint_sets)
+        return built, [(build(), hs.hint_id) for hs in hint_sets], texts
+
+    def run_steered(self, spark, frame, hint_set, timeout_s=None):
+        qi, planned_for = frame
+        assert self.m[qi, planned_for] == self.m[qi, hint_set.hint_id], "ran another class's plan"
+        return super().run_steered(spark, qi, hint_set, timeout_s)
+
+
+def test_one_planned_frame_per_unexplored_plan_class(monkeypatch):
+    """The session keeps one planned frame per plan class with unexplored
+    cells, planned for the class's first such cell, and a class's run
+    executes it; a run explores the whole class and frees its frame."""
+    fake = FramePerHint(quantized(2), monkeypatch)
+    s = fake.session(seed=2)
+    s.bootstrap()
+
+    def first_unexplored_of_each_class() -> dict[tuple[int, str], tuple[int, int]]:
+        first: dict[tuple[int, str], tuple[int, int]] = {}
+        for qi in range(len(s.query_ids)):
+            for hj, fp in s._fingerprints(qi).items():
+                if s.explored[qi, hj] == 0:
+                    first.setdefault((qi, fp), (qi, hj))
+        return first
+
+    assert s._planned == first_unexplored_of_each_class()
+    assert len(s._planned) < (s.explored == 0).sum()
+    for _ in range(3):
+        s.explore(rounds=1, k=4)
+        assert s._planned == first_unexplored_of_each_class()
